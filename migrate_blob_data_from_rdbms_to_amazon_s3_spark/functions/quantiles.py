@@ -92,6 +92,10 @@ def distribution_quantiles(
     the same contraction: one materialization per query, not one per
     stage (r13, guide §1.2/§2.4 — each lazy localCheckpoint costs an
     eager Catalyst planning + subtree stage execution at build time)."""
+    if not wide_domain and (return_grain or extra_aggs):
+        # the narrow path never materializes a grain table to return or
+        # to carry extra aggregates on
+        raise ValueError("return_grain and extra_aggs need wide_domain=True")
     if group_col is None:
         # global quantiles: a constant group, dropped on the way out
         df = df.withColumn("__g", F.lit(0))
@@ -246,7 +250,6 @@ def distribution_quantiles(
             .select(group_col, "__c", "__cum", "__N", "__nrows")
         )
     else:
-        assert not return_grain, "return_grain needs the wide_domain path"
         # domain-bounded grains: one window per group over the distinct
         # grains — the window input is |domain|-bounded whatever the
         # row count, so the single task per group is safe by the

@@ -7,15 +7,22 @@ Legacy shape  (order_id, description, order_blob LONGBLOB)      [in-row]
 objects       orders/<order_id>/<s3_prefix>                      [store]
 pointer table (order_id, description, s3_prefix)                 [Parquet]
 
+Every object request of the migration path (put here, head in validate,
+delete in cascade delete and in incremental_migration's tombstone pass)
+runs through ONE executor-side kernel, ``_per_object``: a ``mapInPandas``
+task that builds one object-store client (the reference's G1 batching
+lesson: credentials/clients per page, not per row) and calls a per-row
+function over its Arrow batches. Keys always come from
+``functions.scalars.s3_object_key``.
+
 Stages:
-1. **write objects** — ``foreachPartition``-style batched side-effect: one
-   object-store client per partition (the reference's G1 batching lesson:
-   credentials/clients per page, not per row). Implemented with
-   ``mapInPandas`` so each task also *returns* its manifest (key, n_bytes,
-   md5) — giving an auditable write receipt instead of a fire-and-forget.
+1. **write objects** — the kernel's put; each task also *returns* its
+   manifest (key, n_bytes, md5) — an auditable write receipt instead of a
+   fire-and-forget.
 2. **emit pointer table** — the target shape, written as Parquet.
-3. **validate** — existence check per key (A14) + count/checksum
-   reconciliation between source blobs and written objects.
+3. **validate** — existence check per key (A14) on the count/checksum
+   reconciliation rows between source blobs and written objects, then
+   one aggregate.
 4. **cascade delete** (A15) — objects first, rows second; a failed object
    delete aborts the row delete (README.md:125-126 ordering contract).
 
@@ -56,6 +63,25 @@ WRITE_MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _per_object(rows: DataFrame, store_url: str, fn, schema: T.StructType) -> DataFrame:
+    """The one executor-side object-I/O kernel: ``fn(store, *row)`` runs
+    once per row of ``rows`` and returns one ``schema`` tuple. The store
+    client is built once per task and reused across its Arrow batches
+    (the reference's G1 batching lesson: clients per page, not per
+    row); every put/head/delete of the migration path goes through here."""
+    names = schema.fieldNames()
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        store = make_store(store_url)
+        for pdf in batches:
+            yield pd.DataFrame(
+                [fn(store, *row) for row in pdf.itertuples(index=False, name=None)],
+                columns=names,
+            )
+
+    return rows.mapInPandas(kernel, schema)
+
+
 def externalize_blobs(
     legacy: DataFrame,
     store_url: str,
@@ -64,30 +90,19 @@ def externalize_blobs(
     s3_prefix: str = DEFAULT_S3_PREFIX,
 ) -> DataFrame:
     """Stage 1: write every blob to ``orders/<id>/<prefix>`` (key scheme
-    order.js:174,273) and return the write manifest. The store client is
-    constructed once per Arrow batch stream (= per task), not per row."""
+    order.js:174,273) and return the write manifest."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        store = make_store(store_url)  # one client per task (G1 batching)
-        for pdf in batches:
-            out = []
-            for oid, blob in zip(pdf[pk], pdf[blob_col]):
-                payload = bytes(blob)
-                if len(payload) > MAX_OBJECT_BYTES:
-                    # order.js:388 content-length-range rejection: flag, skip
-                    out.append((oid, None, len(payload), None, "rejected_oversize"))
-                    continue
-                key = f"orders/{oid}/{s3_prefix}"
-                store.put(key, payload)
-                out.append(
-                    (oid, key, len(payload), hashlib.md5(payload).hexdigest(), "written")
-                )
-            yield pd.DataFrame(
-                out,
-                columns=["order_id", "object_key", "n_bytes", "content_md5", "status"],
-            )
+    def put(store, oid, blob, key):
+        payload = bytes(blob)
+        if len(payload) > MAX_OBJECT_BYTES:
+            # order.js:388 content-length-range rejection: flag, skip
+            return (oid, None, len(payload), None, "rejected_oversize")
+        store.put(key, payload)
+        return (oid, key, len(payload), hashlib.md5(payload).hexdigest(), "written")
 
-    return legacy.select(pk, blob_col).mapInPandas(kernel, WRITE_MANIFEST_SCHEMA)
+    key = s3_object_key(pk, F.lit(s3_prefix)).alias("object_key")
+    rows = legacy.select(pk, blob_col, key)
+    return _per_object(rows, store_url, put, WRITE_MANIFEST_SCHEMA)
 
 
 def pointer_table(legacy: DataFrame, pk: str = "order_id",
@@ -122,43 +137,29 @@ def validate_migration(
     src_present = F.col("src_bytes").isNotNull()
     written = F.col("object_key").isNotNull()
     joined = source_sums.join(manifest, "order_id", "full_outer").select(
-        "order_id",
-        (written & src_present & ~F.col("src_bytes").eqNullSafe(F.col("n_bytes")))
-        .alias("size_mismatch"),
-        (written & src_present & ~F.col("src_md5").eqNullSafe(F.col("content_md5")))
-        .alias("md5_mismatch"),
-        (src_present & ~written & ~F.coalesce(rejected, F.lit(False)))
-        .alias("missing_write"),
-        (~src_present).alias("orphan_manifest"),
-        F.coalesce(src_present & rejected, F.lit(False)).alias("rejected"),
         "object_key",
+        (written & src_present & ~F.col("src_bytes").eqNullSafe(F.col("n_bytes")))
+        .alias("size_mismatches"),
+        (written & src_present & ~F.col("src_md5").eqNullSafe(F.col("content_md5")))
+        .alias("md5_mismatches"),
+        (src_present & ~written & ~F.coalesce(rejected, F.lit(False)))
+        .alias("missing_writes"),
+        (~src_present).alias("orphan_manifests"),
+        F.coalesce(src_present & rejected, F.lit(False)).alias("rejected_oversize"),
     )
-    exists_schema = T.StructType(
-        [T.StructField("order_id", T.StringType()), T.StructField("exists", T.BooleanType())]
-    )
+    counters = joined.columns[1:] + ["missing_objects"]
 
-    def head_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        store = make_store(store_url)
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "order_id": pdf["order_id"],
-                    "exists": [store.head(k) if k else False for k in pdf["object_key"]],
-                }
-            )
+    def head(store, key, *flags):
+        # one output row per joined row: the existence check (A14) rides
+        # the reconciliation rows themselves, so the report is one pass
+        return (*flags, key is not None and not (key and store.head(key)))
 
-    existence = joined.select("order_id", "object_key").mapInPandas(
-        head_kernel, exists_schema
-    )
-    report = joined.join(existence, "order_id").agg(
+    checked = _per_object(joined, store_url, head, T.StructType(
+        [T.StructField(c, T.BooleanType()) for c in counters]
+    ))
+    report = checked.agg(
         F.count("*").alias("n_rows"),
-        F.sum(F.col("size_mismatch").cast("int")).alias("size_mismatches"),
-        F.sum(F.col("md5_mismatch").cast("int")).alias("md5_mismatches"),
-        F.sum(F.col("missing_write").cast("int")).alias("missing_writes"),
-        F.sum(F.col("orphan_manifest").cast("int")).alias("orphan_manifests"),
-        F.sum(F.col("rejected").cast("int")).alias("rejected_oversize"),
-        F.sum((F.col("object_key").isNotNull() & ~F.col("exists")).cast("int"))
-        .alias("missing_objects"),
+        *[F.sum(F.col(c).cast("int")).alias(c) for c in counters],
     )
     return report.collect()[0].asDict()
 
@@ -169,23 +170,13 @@ def cascade_delete(
     """Stage 4 / A15: delete objects FIRST, then drop rows whose object
     delete succeeded (order.js:346-351; ordering contract README.md:126).
     Returns the surviving pointer table."""
-    doomed = pointers.join(keys.select(pk), pk, "left_semi").withColumn(
-        "object_key", s3_object_key(pk, "s3_prefix")
+    doomed = pointers.join(keys.select(pk), pk, "left_semi").select(
+        pk, s3_object_key(pk, "s3_prefix").alias("object_key")
     )
-    schema = T.StructType(
-        [T.StructField(pk, T.StringType()), T.StructField("deleted", T.BooleanType())]
+    results = _per_object(
+        doomed, store_url, lambda store, oid, key: (oid, store.delete(key)),
+        T.StructType([T.StructField(pk, T.StringType()),
+                      T.StructField("deleted", T.BooleanType())]),
     )
-
-    def delete_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        store = make_store(store_url)
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    pk: pdf[pk],
-                    "deleted": [store.delete(k) for k in pdf["object_key"]],
-                }
-            )
-
-    results = doomed.select(pk, "object_key").mapInPandas(delete_kernel, schema)
     removable = results.filter(F.col("deleted")).select(pk)
     return pointers.join(removable, pk, "left_anti")

@@ -56,13 +56,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.scalars import DEFAULT_S3_PREFIX
-from ..sources.object_store import make_store
-from .blob_pipeline import externalize_blobs
+from ..functions.scalars import DEFAULT_S3_PREFIX, s3_object_key
+from .blob_pipeline import _per_object, externalize_blobs
 from .mutation import _writer_lock
 
 LEDGER_PREFIX = "run-"
@@ -75,20 +76,17 @@ def _delete_objects(tombstones: DataFrame, store_url: str, pk: str) -> int:
     returned audit counter comes from an A14 existence check first: it
     counts keys whose object was PRESENT and removed — a retry that
     finds them already gone reports 0 and is equally converged."""
-    import pandas as pd
 
-    def kernel(batches):
-        store = make_store(store_url)
-        for pdf in batches:
-            out = []
-            for oid in pdf[pk]:
-                key = f"orders/{oid}/{DEFAULT_S3_PREFIX}"
-                existed = store.head(key)
-                store.delete(key)
-                out.append(bool(existed))
-            yield pd.DataFrame({"deleted": out})
+    def head_then_delete(store, key):
+        existed = store.head(key)
+        store.delete(key)
+        return (bool(existed),)
 
-    results = tombstones.select(pk).mapInPandas(kernel, "deleted boolean")
+    keys = tombstones.select(
+        s3_object_key(pk, F.lit(DEFAULT_S3_PREFIX)).alias("object_key")
+    )
+    results = _per_object(keys, store_url, head_then_delete,
+                          T.StructType([T.StructField("deleted", T.BooleanType())]))
     return results.filter(F.col("deleted")).count()
 
 
@@ -120,16 +118,22 @@ def current_watermark(state_path: str):
     return watermark, max(e["run_id"] for e in entries) + 1
 
 
-def _committed_run_dirs(state_path: str, pointers_root: str) -> list[str]:
-    """Leaf ``run=<id>`` dirs whose id appears in the committed ledger and
-    which still exist on disk (a committed run's dir may legitimately be
-    gone after a later compaction swept it)."""
-    ids = sorted({e["run_id"] for e in _ledger_entries(state_path)})
-    return [
-        os.path.join(pointers_root, f"run={i}")
-        for i in ids
-        if os.path.isdir(os.path.join(pointers_root, f"run={i}"))
-    ]
+def _run_dirs(pointers_root: str) -> dict[int, str]:
+    """Every ``run=<id>`` dir under ``pointers_root``, keyed by run id in
+    id order — the one parser of the pointer-run layout."""
+    names = os.listdir(pointers_root) if os.path.isdir(pointers_root) else []
+    matches = (re.fullmatch(r"run=(\d+)", d) for d in names)
+    return dict(sorted(
+        (int(m[1]), os.path.join(pointers_root, m[0])) for m in matches if m
+    ))
+
+
+def _committed_run_dirs(state_path: str, runs: dict[int, str]) -> list[str]:
+    """Those of ``runs`` whose id appears in the committed ledger (a
+    committed run's dir may legitimately be gone after a later compaction
+    swept it)."""
+    ids = {e["run_id"] for e in _ledger_entries(state_path)}
+    return [d for i, d in runs.items() if i in ids]
 
 
 def _commit_run(state_path: str, entry: dict) -> None:
@@ -161,6 +165,20 @@ def keep_latest(pointers: DataFrame, pk: str = "order_id",
     )
 
 
+def _live_view(spark: SparkSession, paths: list[str], pk: str,
+               cursor_col: str) -> DataFrame:
+    """Read pointer-run ``paths`` → drop the Hive ``run`` column →
+    keep-latest per key → hide keys whose LATEST row is a tombstone (its
+    history stays in the runs until compaction sweeps it)."""
+    pointers = spark.read.parquet(*paths)
+    if "run" in pointers.columns:
+        pointers = pointers.drop("run")
+    latest = keep_latest(pointers, pk, cursor_col)
+    if "is_deleted" in latest.columns:
+        latest = latest.filter(~F.coalesce(F.col("is_deleted"), F.lit(False)))
+    return latest
+
+
 def read_current(spark: SparkSession, target_path: str, pk: str = "order_id",
                  cursor_col: str = "cursor",
                  state_path: str | None = None) -> DataFrame:
@@ -183,25 +201,14 @@ def read_current(spark: SparkSession, target_path: str, pk: str = "order_id",
     the source of truth."""
     pointers_root = f"{target_path}/pointers"
     if state_path is None:
-        pointers = spark.read.parquet(pointers_root)
-    else:
-        committed = _committed_run_dirs(state_path, pointers_root)
-        if not committed:
-            raise FileNotFoundError(
-                f"no committed pointer runs under {pointers_root} "
-                f"(ledger: {state_path})"
-            )
-        pointers = spark.read.parquet(*committed)
-    if "run" in pointers.columns:
-        pointers = pointers.drop("run")
-    latest = keep_latest(pointers, pk, cursor_col)
-    if "is_deleted" in latest.columns:
-        # a key whose LATEST row is a tombstone is gone from the view
-        # (its history stays in the runs until compaction sweeps it)
-        latest = latest.filter(
-            ~F.coalesce(F.col("is_deleted"), F.lit(False))
+        return _live_view(spark, [pointers_root], pk, cursor_col)
+    committed = _committed_run_dirs(state_path, _run_dirs(pointers_root))
+    if not committed:
+        raise FileNotFoundError(
+            f"no committed pointer runs under {pointers_root} "
+            f"(ledger: {state_path})"
         )
-    return latest
+    return _live_view(spark, committed, pk, cursor_col)
 
 
 class CompactionHorizonError(RuntimeError):
@@ -241,7 +248,6 @@ def read_as_of(spark: SparkSession, target_path: str, run_id: int,
         raise ValueError(
             f"run {run_id} is not a committed version (committed: {ids})"
         )
-    pointers_root = f"{target_path}/pointers"
     compactions = [e["run_id"] for e in entries if e.get("compaction")]
     horizon = max(compactions, default=None)
     if horizon is not None and run_id < horizon:
@@ -254,23 +260,15 @@ def read_as_of(spark: SparkSession, target_path: str, run_id: int,
     # set is [horizon .. run_id]; without one it is every id <= run_id
     lo = horizon if horizon is not None else -1
     wanted = [i for i in ids if lo <= i <= run_id]
-    dirs, missing = [], []
-    for i in wanted:
-        d = os.path.join(pointers_root, f"run={i}")
-        (dirs if os.path.isdir(d) else missing).append(d if os.path.isdir(d) else i)
+    runs = _run_dirs(f"{target_path}/pointers")
+    missing = [i for i in wanted if i not in runs]
     if missing:
         raise CompactionHorizonError(
             f"version {run_id} needs run dirs {missing} that are gone from "
             f"disk (outside any committed compaction's sweep — storage loss, "
             f"not history retention)"
         )
-    pointers = spark.read.parquet(*dirs)
-    if "run" in pointers.columns:
-        pointers = pointers.drop("run")
-    latest = keep_latest(pointers, pk, cursor_col)
-    if "is_deleted" in latest.columns:
-        latest = latest.filter(~F.coalesce(F.col("is_deleted"), F.lit(False)))
-    return latest
+    return _live_view(spark, [runs[i] for i in wanted], pk, cursor_col)
 
 
 def compact_pointer_runs(
@@ -289,8 +287,8 @@ def compact_pointer_runs(
       writing there and then sweeping "old" dirs would delete the fresh
       compaction output while its ledger entry commits as successful.
       The id is bumped past every ``run=`` dir on disk instead.
-    - **Only COMMITTED runs are compacted** (read_current with the
-      ledger): a crashed pass's half-written increment is neither
+    - **Only COMMITTED runs are compacted** (read_current's view with
+      the ledger): a crashed pass's half-written increment is neither
       consolidated nor silently promoted — its owner's retry re-reads
       the same rows from the source (the watermark never moved).
     - **The ledger entry commits BEFORE any dir is removed.** A crash
@@ -314,35 +312,23 @@ def compact_pointer_runs(
     with _writer_lock(f"{state_path}/ledger", timeout_s=lock_timeout_s):
         watermark, run_id = current_watermark(state_path)
         pointers_root = f"{target_path}/pointers"
-        if not os.path.isdir(pointers_root):
-            return {"run_id": run_id, "n_rows": 0, "compaction": True,
-                    "committed": False}
-        all_runs = [d for d in os.listdir(pointers_root) if d.startswith("run=")]
-        if not _committed_run_dirs(state_path, pointers_root):
+        runs = _run_dirs(pointers_root)
+        committed = _committed_run_dirs(state_path, runs)
+        if not committed:
             # nothing committed to compact — dirty dirs (if any) belong
             # to crashed passes whose retries will rewrite them
             return {"run_id": run_id, "n_rows": 0, "compaction": True,
                     "committed": False}
-        existing_ids = []
-        for d in all_runs:
-            try:
-                existing_ids.append(int(d.split("=", 1)[1]))
-            except ValueError:
-                pass
-        if existing_ids:  # never reuse a dir of unknown provenance
-            run_id = max(run_id, max(existing_ids) + 1)
-        current = read_current(spark, target_path, pk, cursor_col,
-                               state_path=state_path)
+        # never reuse a dir of unknown provenance
+        run_id = max(run_id, max(runs) + 1)
+        current = _live_view(spark, committed, pk, cursor_col)
         n_rows = current.count()
-        out_dir = f"run={run_id}"
-        current.write.mode("overwrite").parquet(f"{pointers_root}/{out_dir}")
+        current.write.mode("overwrite").parquet(f"{pointers_root}/run={run_id}")
         entry = {"run_id": run_id, "watermark": watermark, "n_rows": n_rows,
                  "compaction": True, "committed": True}
         _commit_run(state_path, entry)
-        for d in all_runs:  # commit is durable: now drop the history
-            if d != out_dir:
-                shutil.rmtree(os.path.join(pointers_root, d),
-                              ignore_errors=True)
+        for path in runs.values():  # commit is durable: now drop the history
+            shutil.rmtree(path, ignore_errors=True)
         return entry
 
 
@@ -375,33 +361,18 @@ def vacuum_pointer_runs(
 
     os.makedirs(state_path, exist_ok=True)
     with _writer_lock(f"{state_path}/ledger", timeout_s=lock_timeout_s):
-        pointers_root = f"{target_path}/pointers"
-        if not os.path.isdir(pointers_root):
-            return {"removed_shadowed": 0, "removed_uncommitted": 0, "kept": 0}
+        runs = _run_dirs(f"{target_path}/pointers")
         entries = _ledger_entries(state_path)
         committed_ids = {e["run_id"] for e in entries}
-        compaction_ids = [
-            e["run_id"] for e in entries if e.get("compaction") and e.get("committed")
-        ]
         # a committed compaction whose dir a later crash removed is not a
         # valid shadow anchor; require the dir to exist
         anchor = max(
-            (
-                i
-                for i in compaction_ids
-                if os.path.isdir(os.path.join(pointers_root, f"run={i}"))
-            ),
+            (e["run_id"] for e in entries
+             if e.get("compaction") and e.get("committed") and e["run_id"] in runs),
             default=None,
         )
         removed_shadowed = removed_uncommitted = kept = 0
-        for d in sorted(os.listdir(pointers_root)):
-            if not d.startswith("run="):
-                continue
-            try:
-                rid = int(d.split("=", 1)[1])
-            except ValueError:
-                continue
-            path = os.path.join(pointers_root, d)
+        for rid, path in runs.items():
             if anchor is not None and rid < anchor:
                 shutil.rmtree(path, ignore_errors=True)
                 removed_shadowed += 1

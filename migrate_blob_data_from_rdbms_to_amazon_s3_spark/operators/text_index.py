@@ -37,6 +37,8 @@ from __future__ import annotations
 
 import shutil
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -105,9 +107,11 @@ def build_text_index(docs: DataFrame, path: str) -> None:
     )
     try:
         n_docs = int(obs.get["n"])
-    except Exception:
-        # zero-task write (empty corpus): no metrics row — the read-back
-        # count is trivially cheap on that degenerate path
+    except (PySparkException, Py4JError):
+        # a Spark build that posts no metrics row for a zero-task write
+        # (empty corpus) fails the JVM lookup — the read-back count is
+        # trivially cheap on that degenerate path. Anything else (a key
+        # typo included) is a bug and surfaces.
         n_docs = sigs.count()
     arrow_local_df(
         spark,

@@ -345,9 +345,9 @@ def read_objects(
     )
 
 
-def make_store(url: str, attempts: int = 3):
+def make_store(url: str):
     """``file:///path`` or ``s3://bucket`` → store instance, wrapped in
-    bounded retries by default (attempts=1 disables). Called inside
+    bounded retries (``.inner`` is the bare store). Called inside
     executor tasks (the factory string travels; clients do not)."""
     if url.startswith("file://"):
         store = LocalFSObjectStore(url.removeprefix("file://"))
@@ -369,4 +369,4 @@ def make_store(url: str, attempts: int = 3):
         )
     else:
         raise ValueError(f"unsupported object store url: {url}")
-    return RetryingStore(store, attempts=attempts) if attempts > 1 else store
+    return RetryingStore(store)

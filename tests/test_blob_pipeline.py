@@ -1,6 +1,9 @@
 """End-to-end blob externalization: the reference's core migration as one
 Spark job (SURVEY §7 M1.5), against the local object store."""
 
+import ast
+import pathlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -144,6 +147,52 @@ def test_validation_catches_phantom_writes(spark, legacy, tmp_path):
     assert report["size_mismatches"] == 0  # NULL src must not leak into these
     assert report["md5_mismatches"] == 0
     assert report["missing_writes"] == 0
+
+
+def test_validation_counts_each_reconciliation_row_once(spark, legacy, tmp_path):
+    """The report has one row per full-outer-join row: a duplicated
+    manifest row is counted once (not squared by a join back on the key),
+    and a NULL-PK source row with no object is a missing write, not a
+    row that drops out of the report."""
+    url = f"file://{tmp_path}/store"
+    manifest = BP.externalize_blobs(legacy, url)
+    manifest.cache()
+    manifest.count()
+    dup = BP.validate_migration(legacy, manifest.unionByName(manifest.limit(1)), url)
+    assert dup["n_rows"] == 4
+    assert dup["missing_objects"] == 0
+
+    ghost = spark.createDataFrame(
+        [(None, "no key", b"lost")],
+        "order_id string, description string, order_blob binary",
+    )
+    report = BP.validate_migration(legacy.unionByName(ghost), manifest, url)
+    assert report["n_rows"] == 4
+    assert report["missing_writes"] == 1
+    assert report["missing_objects"] == 0
+    assert report["orphan_manifests"] == 0
+
+
+def test_object_io_and_key_format_live_in_one_place():
+    """Every object request of the operators goes through the one
+    executor-side kernel, and ``s3_object_key`` is the only place that
+    knows the ``orders/<id>/<prefix>`` key format."""
+    pkg = pathlib.Path(BP.__file__).resolve().parents[1]
+    callers, key_fstrings = set(), []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                func = getattr(node, "func", None)
+                name = getattr(func, "id", getattr(func, "attr", None))
+                if path.parent.name == "operators" and name == "make_store":
+                    callers.add((path.name, getattr(top, "name", None)))
+                if (isinstance(node, ast.JoinedStr) and node.values
+                        and isinstance(node.values[0], ast.Constant)
+                        and str(node.values[0].value).startswith("orders/")):
+                    key_fstrings.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert callers == {("blob_pipeline.py", "_per_object")}
+    assert key_fstrings == []
 
 
 def test_cascade_delete_s3_first(spark, legacy, tmp_path):

@@ -7,6 +7,7 @@ values, zero weights, negative values, h=0 rank hits)."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.functions.quantiles import (
@@ -81,3 +82,19 @@ def test_distribution_edge_shapes(spark):
             ref = _reference(spark, rows, weighted)
             got = _distribution(spark, rows, weighted, wide=True)
             assert got == ref, (rows, weighted)
+
+
+def test_narrow_path_rejects_return_grain(spark):
+    df = spark.createDataFrame([("a", 1.0, 1)], "g string, v double, w long")
+    with pytest.raises(ValueError, match="wide_domain"):
+        distribution_quantiles(df, "g", "v", PS, wide_domain=False, return_grain=True)
+
+
+def test_narrow_path_rejects_extra_aggs(spark):
+    # the narrow cumsum never carries the grain table, so the aggregates
+    # would be computed and then silently dropped
+    df = spark.createDataFrame([("a", 1.0, 1)], "g string, v double, w long")
+    with pytest.raises(ValueError, match="wide_domain"):
+        distribution_quantiles(
+            df, "g", "v", PS, wide_domain=False, extra_aggs={"n_w": F.sum("w")}
+        )

@@ -64,7 +64,7 @@ def legacy(spark):
 
 
 def _clear_bucket(url):
-    store = make_store(url, attempts=1)
+    store = make_store(url).inner
     resp = store._client.list_objects_v2(Bucket=BUCKET)
     for obj in resp.get("Contents", []):
         store.delete(obj["Key"])
@@ -105,7 +105,7 @@ def test_s3_client_error_is_permanent_no_retry(s3_url):
             calls["n"] += 1
             return self.inner.get(key)
 
-    inner = make_store(s3_url, attempts=1)
+    inner = make_store(s3_url).inner
     wrapped = RetryingStore(Counting(inner), attempts=3)
     with pytest.raises(Exception) as ei:
         wrapped.get("orders/never-written/image.png")
