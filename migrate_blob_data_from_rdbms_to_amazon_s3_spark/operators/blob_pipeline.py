@@ -11,9 +11,13 @@ Every object request of the migration path (put here, head in validate,
 delete in cascade delete and in incremental_migration's tombstone pass)
 runs through ONE executor-side kernel, ``_per_object``: a ``mapInPandas``
 task that builds one object-store client (the reference's G1 batching
-lesson: credentials/clients per page, not per row) and calls a per-row
-function over its Arrow batches. Keys always come from
-``functions.scalars.s3_object_key``.
+lesson: credentials/clients per page, not per row) and keeps up to
+``IN_FLIGHT`` (8) per-row requests in flight on it over its Arrow
+batches; requests on the same object key run one after another, in row
+order. Each request is a network round trip, and AQE can coalesce a
+stage of tiny key rows into a single task, so one request at a time per
+task made the round trips the migration's wall time. Keys always come
+from ``functions.scalars.s3_object_key``.
 
 Stages:
 1. **write objects** — the kernel's put; each task also *returns* its
@@ -27,16 +31,21 @@ Stages:
    delete aborts the row delete (README.md:125-126 ordering contract).
 
 At 100 TB: the object writes are the bottleneck, and they scale with
-partition count — ``repartition`` the legacy table by key range so tasks
-are uniform, size partitions so each holds ~128-256 MB of blobs, and let
-speculative execution retry stragglers. The pointer-table emit is a narrow
+partition count × ``IN_FLIGHT`` — ``repartition`` the legacy table by key
+range so tasks are uniform, size partitions so each holds ~128-256 MB of
+blobs, and let speculative execution retry stragglers. The pointer-table emit is a narrow
 projection of the same scan (no second read of the blobs).
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import threading
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
+from itertools import islice
+from operator import itemgetter
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -44,7 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalars import DEFAULT_S3_PREFIX, s3_object_key
-from ..sources.object_store import make_store
+from ..sources.object_store import IN_FLIGHT, make_store
 
 # Ingestion contract: the reference's presigned POST enforces
 # content-length-range 0..10485760 (order.js:388) — oversize payloads are
@@ -63,19 +72,71 @@ WRITE_MANIFEST_SCHEMA = T.StructType(
 )
 
 
+def _map_in_flight(fn: Callable, rows: Iterable[tuple], key: Callable) -> list:
+    """``[fn(*row) for row in rows]`` with up to ``IN_FLIGHT`` calls
+    running at once on a thread pool, results in row order. Rows that
+    share ``key(row)`` (the object key) run one after another in input
+    order, as in a serial loop: the last row for a key is the last
+    request on that object, and two writes to one object never overlap.
+    The first error stops submission (rows not yet started are never
+    called), waits for the calls already running and re-raises: an I/O
+    failure fails the task, it is never swallowed."""
+    rows = list(rows)
+    out: list = [None] * len(rows)
+    by_key: dict = {}
+    for i, row in enumerate(rows):
+        by_key.setdefault(key(row), []).append(i)
+    stop = threading.Event()
+
+    def run(chain: list) -> None:
+        for i in chain:
+            if stop.is_set():
+                return
+            out[i] = fn(*rows[i])
+
+    chains = iter(by_key.values())
+    pending: set = set()
+    with ThreadPoolExecutor(IN_FLIGHT) as pool:
+        try:
+            while True:
+                pending |= {pool.submit(run, c)
+                            for c in islice(chains, IN_FLIGHT - len(pending))}
+                if not pending:
+                    return out
+                done, pending = wait(pending, return_when=FIRST_COMPLETED)
+                for f in done:
+                    f.result()
+        finally:
+            stop.set()
+
+
 def _per_object(rows: DataFrame, store_url: str, fn, schema: T.StructType) -> DataFrame:
     """The one executor-side object-I/O kernel: ``fn(store, *row)`` runs
     once per row of ``rows`` and returns one ``schema`` tuple. The store
     client is built once per task and reused across its Arrow batches
     (the reference's G1 batching lesson: clients per page, not per
-    row); every put/head/delete of the migration path goes through here."""
+    row); every put/head/delete of the migration path goes through here.
+
+    Up to ``IN_FLIGHT`` calls run concurrently on that one client
+    (``_map_in_flight``; boto3 clients are thread-safe and the S3 client
+    pools ``IN_FLIGHT`` connections). Rows with the same ``object_key``
+    column value run one after another in row order, so a batch holding
+    two versions of one key still ends with the later version stored.
+    Why 8: on the benchmark's ``backfill_s3`` cycle (moto S3 with 10 ms
+    per request, 4-core host) one in flight took 13.2 s and 8 took
+    6.1 s (medians of 10 runs); 4, 8 and 16 were indistinguishable
+    there (6.8 / 6.7 / 6.6 s, medians of 3 runs) because the local moto
+    server, not the round trips, is then the limit. Whether a real
+    store's longer round trips gain more from 8 than from 4 is
+    unmeasured."""
     names = schema.fieldNames()
+    key = itemgetter(rows.columns.index("object_key"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        store = make_store(store_url)
+        call = partial(fn, make_store(store_url))
         for pdf in batches:
             yield pd.DataFrame(
-                [fn(store, *row) for row in pdf.itertuples(index=False, name=None)],
+                _map_in_flight(call, pdf.itertuples(index=False, name=None), key),
                 columns=names,
             )
 

@@ -16,12 +16,14 @@ One pass (``migrate_increment``):
    ``{target}/staging/run=<id>`` Parquet BEFORE any side-effect. The
    RDBMS is scanned exactly once per pass; blob writes and pointer rows
    both derive from the immutable staged copy, so a retry never sees a
-   different increment than the failed attempt.
+   different increment than the failed attempt. The increment's row
+   count and ``max(cursor)`` are an ``Observation`` on this write; an
+   empty increment returns here, before any object I/O.
 3. **Externalize blobs** — operators/blob_pipeline.externalize_blobs
    over the staged copy (one store client per task, manifest receipt,
    10 MB cap contract of order.js:388). Object keys are derived from
    the PK, so re-writing after a crash overwrites the same keys:
-   idempotent.
+   idempotent. The ledger entry counts written and rejected objects.
 4. **Emit pointer rows** — the post-migration shape plus ``(run_id,
    cursor)`` lineage columns, written to ``{target}/pointers/run=<id>``
    (overwrite — a re-run of the same pass replaces its own output, it
@@ -58,7 +60,7 @@ import json
 import os
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -434,18 +436,34 @@ def migrate_increment(
         if watermark is not None:
             increment = increment.filter(F.col(cursor_col) > F.lit(watermark))
         staging = f"{target_path}/staging/run={run_id}"
-        increment.write.mode("overwrite").parquet(staging)
-        staged = spark.read.parquet(staging)
-        n_rows = staged.count()
+        # the increment's row count and new watermark ride the staging
+        # write (no re-scan of the staged copy)
+        new_max = F.max(cursor_col)
+        if isinstance(increment.select(cursor_col).schema[0].dataType,
+                      (T.TimestampType, T.TimestampNTZType)):
+            # rendered in the session time zone, the zone the next pass's
+            # filter parses it in (a collected datetime is in the
+            # driver's local zone, which shifts the watermark)
+            new_max = F.date_format(new_max, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
+        obs = Observation()
+        increment.observe(
+            obs, F.count(F.lit(1)).alias("n_rows"), new_max.alias("watermark"),
+        ).write.mode("overwrite").parquet(staging)
+        stats = obs.get
+        n_rows, new_watermark = stats["n_rows"], stats["watermark"]
         if n_rows == 0:
             return {"run_id": run_id, "watermark": watermark, "n_rows": 0,
                     "committed": False}
+        staged = spark.read.parquet(staging)
         is_tomb = (
             F.col(op_col) == F.lit("D") if op_col else F.lit(False)
         )
         live = staged.filter(~is_tomb)
         manifest = externalize_blobs(live, store_url, pk=pk, blob_col=blob_col)
-        n_written = manifest.filter(F.col("status") == "written").count()
+        n_written, n_rejected = manifest.agg(
+            F.count_if(F.col("status") == "written"),
+            F.count_if(F.col("status") == "rejected_oversize"),
+        ).collect()[0]
         n_deleted = 0
         if op_col:
             # objects FIRST, pointer tombstones second (order.js:346-351
@@ -461,7 +479,6 @@ def migrate_increment(
         pointer_rows.write.mode("overwrite").parquet(
             f"{target_path}/pointers/run={run_id}"
         )
-        new_watermark = staged.agg(F.max(cursor_col)).collect()[0][0]
         entry = {
             "run_id": run_id,
             "watermark": (
@@ -471,6 +488,7 @@ def migrate_increment(
             ),
             "n_rows": n_rows,
             "n_objects_written": n_written,
+            "n_objects_rejected": n_rejected,
             "n_objects_deleted": n_deleted,
             "committed": True,
         }

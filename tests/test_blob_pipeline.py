@@ -3,6 +3,10 @@ Spark job (SURVEY §7 M1.5), against the local object store."""
 
 import ast
 import pathlib
+import random
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,6 +14,7 @@ from pyspark.sql import functions as F
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators import blob_pipeline as BP
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators import bridge
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.sources.object_store import (
+    IN_FLIGHT,
     make_store,
     read_objects,
 )
@@ -208,3 +213,116 @@ def test_cascade_delete_s3_first(spark, legacy, tmp_path):
     # repeat delete of an absent key: no-op, absence-tolerant (README.md:125)
     again = BP.cascade_delete(survivors, keys, url)
     assert sorted(r.order_id for r in again.collect()) == ["b", "c"]
+
+
+# --- the kernel's in-flight loop, without Spark --------------------------------
+
+
+class FakeStore:
+    """Records every ``head`` it serves; ``on_head(key)`` shapes the call."""
+
+    def __init__(self, on_head):
+        self.on_head = on_head
+        self.calls = []
+        self._lock = threading.Lock()
+
+    def head(self, key):
+        with self._lock:
+            self.calls.append(key)
+        return self.on_head(key)
+
+
+def _first(row):
+    return row[0]
+
+
+def test_map_in_flight_keeps_in_flight_requests_running_at_once():
+    """Every call waits on a barrier of ``IN_FLIGHT`` parties: run one at
+    a time, the first wait would time out and break the barrier."""
+    barrier = threading.Barrier(IN_FLIGHT, timeout=10)
+
+    def on_head(key):
+        barrier.wait()
+        return True
+
+    store = FakeStore(on_head)
+    keys = [f"k{i}" for i in range(3 * IN_FLIGHT)]
+    assert BP._map_in_flight(store.head, [(k,) for k in keys], _first) == [True] * len(keys)
+    assert sorted(store.calls) == sorted(keys)
+
+
+def test_map_in_flight_returns_rows_in_input_order():
+    rng = random.Random(7)
+    delays = {i: rng.uniform(0, 0.01) for i in range(50)}
+
+    def on_head(i):
+        time.sleep(delays[i])
+        return i * 10
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        out = BP._map_in_flight(FakeStore(on_head).head, [(i,) for i in range(50)], _first)
+    finally:
+        sys.setswitchinterval(interval)
+    assert out == [i * 10 for i in range(50)]
+
+
+def test_map_in_flight_runs_rows_of_one_key_one_after_another():
+    """Four versions of each of ``IN_FLIGHT`` keys, key-major as a CDC
+    increment stages them: calls on one key never overlap and run in
+    input order, so each key ends at its last version."""
+    lock = threading.Lock()
+    active, overlaps, seen = set(), [], []
+
+    def put(key, version):
+        with lock:
+            if key in active:
+                overlaps.append((key, version))
+            active.add(key)
+        time.sleep(0.005)
+        with lock:
+            active.discard(key)
+            seen.append((key, version))
+        return version
+
+    rows = [(f"k{k}", v) for k in range(IN_FLIGHT) for v in range(4)]
+    assert BP._map_in_flight(put, rows, _first) == [v for _, v in rows]
+    assert overlaps == []
+    for k in range(IN_FLIGHT):
+        assert [v for key, v in seen if key == f"k{k}"] == [0, 1, 2, 3]
+
+
+def test_map_in_flight_first_error_propagates_and_stops_submission(monkeypatch):
+    """Row 3 fails. The other calls of the first window are held until
+    row 3's future has failed (a future wakes its waiters before it runs
+    its done-callbacks), so the loop sees the error before any other
+    completion: it re-raises the error as raised, and no row past the
+    first window is ever called (rows of the window whose thread had not
+    started by then are skipped too)."""
+
+    class Throttled(Exception):
+        pass
+
+    failed = threading.Event()
+
+    class Pool(BP.ThreadPoolExecutor):
+        def submit(self, *args):
+            f = super().submit(*args)
+            f.add_done_callback(
+                lambda f: not f.cancelled() and f.exception() and failed.set())
+            return f
+
+    monkeypatch.setattr(BP, "ThreadPoolExecutor", Pool)
+
+    def on_head(i):
+        if i == 3:
+            raise Throttled("row 3")
+        assert failed.wait(10)
+        return True
+
+    store = FakeStore(on_head)
+    with pytest.raises(Throttled, match="row 3"):
+        BP._map_in_flight(store.head, [(i,) for i in range(20 * IN_FLIGHT)], _first)
+    assert 3 in store.calls
+    assert set(store.calls) <= set(range(IN_FLIGHT))

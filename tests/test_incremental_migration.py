@@ -16,12 +16,17 @@ Contracts under test:
 
 from __future__ import annotations
 
+import datetime
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.blob_pipeline import (
+    MAX_OBJECT_BYTES,
+)
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.incremental_migration import (
     current_watermark,
     migrate_increment,
@@ -78,8 +83,8 @@ def test_incremental_passes_and_keep_latest(spark, derby_cdc, tmp_path):
         state_path=state, cursor_col="seq",
     )
     assert e1 == {"run_id": 0, "watermark": 10, "n_rows": 10,
-                  "n_objects_written": 10, "n_objects_deleted": 0,
-                  "committed": True}
+                  "n_objects_written": 10, "n_objects_rejected": 0,
+                  "n_objects_deleted": 0, "committed": True}
     assert current_watermark(state) == (10, 1)
     assert make_store(store_url).head("orders/id-003/image.png")
 
@@ -566,3 +571,163 @@ def test_read_as_of_time_travel(spark, derby_cdc, tmp_path):
              for r in read_as_of(spark, target, ce["run_id"],
                                  state_path=state).collect()}
     assert asofc == cur
+
+
+def test_ledger_counts_rejected_oversize_blobs(spark, derby_cdc, tmp_path):
+    """A blob over the 10 MB cap is rejected at externalization, and the
+    pass's ledger entry says so next to the written count."""
+    url, write = derby_cdc
+    store_url, target, state = _paths(tmp_path)
+    source = _src(url).load(spark)
+    migrate_increment(spark, source, store_url=store_url, target_path=target,
+                      state_path=state, cursor_col="seq")
+    write([(11, "id-011", "fits", b"\x0b" * 64),
+           (12, "id-012", "over the cap", b"\x0c" * (MAX_OBJECT_BYTES + 1))])
+    e = migrate_increment(spark, source, store_url=store_url, target_path=target,
+                          state_path=state, cursor_col="seq")
+    assert (e["n_rows"], e["n_objects_written"], e["n_objects_rejected"]) == (2, 1, 1)
+    with open(os.path.join(state, "run-00000001.json")) as fh:
+        assert json.load(fh)["n_objects_rejected"] == 1
+    assert not make_store(store_url).head("orders/id-012/image.png")
+
+
+def _derby_ts(spark, tmp_path):
+    """Embedded Derby source keyed by a TIMESTAMP cursor (``updated_at``)."""
+    url = f"jdbc:derby:{tmp_path}/tsdb;create=true"
+
+    def write(rows, mode="append"):
+        spark.createDataFrame(
+            rows,
+            "updated_at timestamp, order_id string, description string, "
+            "order_blob binary",
+        ).write.format("jdbc").options(
+            url=url, dbtable="orders_ts", driver=DERBY_DRIVER
+        ).mode(mode).save()
+
+    source = JdbcSource(url=url, table="orders_ts", driver=DERBY_DRIVER)
+    return source, write
+
+
+def _ts(second, micro=0):
+    return datetime.datetime(2024, 3, 1, 12, 0, second, micro)
+
+
+def _session_iso(local):
+    """The watermark string of a driver-local datetime: its wall clock in
+    the session time zone (UTC), microseconds always shown."""
+    return local.astimezone(datetime.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%f")
+
+
+@pytest.fixture(params=["UTC", "America/New_York"])
+def driver_tz(request, monkeypatch):
+    """Run the driver's Python side in ``param`` while the Spark session
+    stays on UTC: collected datetimes then differ from the session's
+    wall clock."""
+    monkeypatch.setenv("TZ", request.param)
+    time.tzset()
+    yield request.param
+    monkeypatch.undo()
+    time.tzset()
+
+
+def test_timestamp_cursor_watermark_round_trips(spark, tmp_path, driver_tz):
+    """A timestamp cursor commits its watermark as an ISO string in the
+    session time zone whatever the driver's zone, and the next pass
+    stages only rows strictly past it (a late row stamped before the
+    watermark stays behind)."""
+    source, write = _derby_ts(spark, tmp_path)
+    write([(_ts(s, 250000 * (s == 3)), f"id-{s}", f"desc {s}", bytes([s]) * 8)
+           for s in (1, 2, 3)], mode="overwrite")
+    store_url, target, state = _paths(tmp_path)
+    kw = dict(store_url=store_url, target_path=target, state_path=state,
+              cursor_col="updated_at")
+    df = source.load(spark)
+
+    e1 = migrate_increment(spark, df, **kw)
+    assert e1["n_rows"] == 3
+    assert e1["watermark"] == _session_iso(_ts(3, 250000))
+    with open(os.path.join(state, "run-00000000.json")) as fh:
+        wm = json.load(fh)["watermark"]
+    assert wm == {"UTC": "2024-03-01T12:00:03.250000",
+                  "America/New_York": "2024-03-01T17:00:03.250000"}[driver_tz]
+
+    write([(_ts(3), "id-late", "before the watermark", b"l"),
+           (_ts(3, 250001), "id-4", "desc 4", b"4"),
+           (_ts(9), "id-2", "desc 2 v2", b"2" * 3)])
+    e2 = migrate_increment(spark, df, **kw)
+    assert (e2["n_rows"], e2["watermark"]) == (2, _session_iso(_ts(9)))
+    staged = spark.read.parquet(f"{target}/staging/run=1")
+    assert sorted(r["order_id"] for r in staged.collect()) == ["id-2", "id-4"]
+    cur = {r["order_id"]: r["description"] for r in read_current(spark, target).collect()}
+    assert cur == {"id-1": "desc 1", "id-2": "desc 2 v2", "id-3": "desc 3",
+                   "id-4": "desc 4"}
+
+
+def test_empty_increment_commits_nothing_and_touches_no_store(spark, tmp_path):
+    """An empty increment returns the uncommitted no-op marker, leaves the
+    ledger byte-identical, and returns before any object I/O: the pass
+    runs with a store URL that every object request would reject."""
+    source, write = _derby_ts(spark, tmp_path)
+    write([(_ts(1), "id-1", "desc 1", b"1")], mode="overwrite")
+    store_url, target, state = _paths(tmp_path)
+    df = source.load(spark)
+    migrate_increment(spark, df, store_url=store_url, target_path=target,
+                      state_path=state, cursor_col="updated_at")
+
+    def ledger():
+        return {n: open(os.path.join(state, n)).read() for n in os.listdir(state)}
+
+    before = ledger()
+    e = migrate_increment(spark, df, store_url="unsupported://no-store",
+                          target_path=target, state_path=state,
+                          cursor_col="updated_at")
+    assert e == {"run_id": 1, "watermark": _session_iso(_ts(1)), "n_rows": 0,
+                 "committed": False}
+    assert ledger() == before
+    assert current_watermark(state) == (_session_iso(_ts(1)), 1)
+
+
+def _versions(n_keys=8, n_versions=3, size=32 * 1024):
+    """Key-major CDC rows ``(seq, order_id, description, order_blob, op)``:
+    an insert and ``n_versions - 1`` updates per key, each version with
+    its own blob."""
+    return [(k * n_versions + v + 1, f"id-{k}", f"v{v}",
+             bytes([k * n_versions + v]) * size, "U" if v else "I")
+            for k in range(n_keys) for v in range(n_versions)]
+
+
+def test_versions_of_one_key_in_one_pass_leave_the_newest_object(spark, tmp_path):
+    """One increment holds an insert and two updates of every key, and a
+    later one tombstones a key twice. Each key's object must be its
+    newest blob (the version read_current shows), and the twice
+    tombstoned key counts one deleted object."""
+    url = f"jdbc:derby:{tmp_path}/versdb;create=true"
+
+    def write(rows, mode="append"):
+        spark.createDataFrame(
+            rows, "seq long, order_id string, description string, "
+            "order_blob binary, op string",
+        ).write.format("jdbc").options(
+            url=url, dbtable="orders_versions", driver=DERBY_DRIVER
+        ).mode(mode).save()
+
+    rows = _versions()
+    write(rows, mode="overwrite")
+    store_url, target, state = _paths(tmp_path)
+    source = JdbcSource(url=url, table="orders_versions",
+                        driver=DERBY_DRIVER).load(spark)
+    kw = dict(store_url=store_url, target_path=target, state_path=state,
+              cursor_col="seq", op_col="op")
+    e1 = migrate_increment(spark, source, **kw)
+    assert (e1["n_rows"], e1["n_objects_written"]) == (24, 24)
+    newest = {oid: (desc, blob) for _, oid, desc, blob, _ in rows}
+    store = make_store(store_url)
+    for oid, (_, blob) in newest.items():
+        assert store.get(f"orders/{oid}/image.png") == blob
+    cur = {r["order_id"]: r["description"] for r in read_current(spark, target).collect()}
+    assert cur == {oid: desc for oid, (desc, _) in newest.items()}
+
+    write([(25, "id-0", None, None, "D"), (26, "id-0", None, None, "D")])
+    e2 = migrate_increment(spark, source, **kw)
+    assert e2["n_objects_deleted"] == 1
+    assert not store.head("orders/id-0/image.png")

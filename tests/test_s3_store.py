@@ -20,7 +20,11 @@ boto3 = pytest.importorskip("boto3")
 from moto.server import ThreadedMotoServer
 
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators import blob_pipeline as BP
+from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.incremental_migration import (
+    migrate_increment,
+)
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.sources.object_store import (
+    IN_FLIGHT,
     RetryingStore,
     S3ObjectStore,
     _is_permanent,
@@ -84,6 +88,12 @@ def test_s3_store_roundtrip(s3_url):
     assert not store.head("orders/x/image.png")
     # absence-tolerant: deleting the now-absent key is still success
     assert store.delete("orders/x/image.png") is True
+
+
+def test_s3_client_pools_a_connection_per_in_flight_request(s3_url):
+    """The kernel's request threads never outnumber the client's pooled
+    connections (botocore's default pool is 10)."""
+    assert make_store(s3_url).inner._client.meta.config.max_pool_connections == IN_FLIGHT
 
 
 def test_s3_arn_bucket_strip(s3_url):
@@ -152,3 +162,22 @@ def test_externalize_validate_cascade_on_s3(spark, legacy, s3_url):
     # repeat delete of an absent key: no-op (README.md:125)
     again = BP.cascade_delete(survivors, keys, s3_url)
     assert sorted(r.order_id for r in again.collect()) == ["b", "c"]
+
+
+def test_versions_of_one_key_in_one_pass_leave_the_newest_object_on_s3(
+        spark, s3_url, tmp_path):
+    """An increment with an insert and two updates of every key, each
+    version with its own blob, leaves each key's newest blob in S3."""
+    _clear_bucket(s3_url)
+    rows = [(k * 3 + v + 1, f"id-{k}", f"v{v}", bytes([k * 3 + v]) * 4096)
+            for k in range(8) for v in range(3)]
+    source = spark.createDataFrame(
+        rows, "seq long, order_id string, description string, order_blob binary"
+    ).coalesce(1)
+    e = migrate_increment(spark, source, store_url=s3_url,
+                          target_path=str(tmp_path / "target"),
+                          state_path=str(tmp_path / "state"), cursor_col="seq")
+    assert e["n_objects_written"] == 24
+    store = make_store(s3_url)
+    for _, oid, _, blob in rows[2::3]:
+        assert store.get(f"orders/{oid}/image.png") == blob
