@@ -43,6 +43,8 @@ a kernel over only the new planes.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -142,7 +144,7 @@ def build_ann_index(
     try:
         got = obs.get
         n = int(got["n"])
-    except Exception:
+    except (PySparkException, Py4JError):
         # a zero-task write (empty corpus) produces no metrics row and
         # obs.get raises; fall back to the read-back count, trivially
         # cheap on that degenerate path
@@ -462,7 +464,7 @@ def widen_ann_index(
     back = spark.read.parquet(f"{out_path}/signatures")
     try:
         n_back = int(obs.get["n"])
-    except Exception:
+    except (PySparkException, Py4JError):
         # zero-task write (empty index): no metrics row — read-back
         # count is trivially cheap on that degenerate path
         n_back = back.count()

@@ -7,9 +7,11 @@ Legacy shape  (order_id, description, order_blob LONGBLOB)      [in-row]
 objects       orders/<order_id>/<s3_prefix>                      [store]
 pointer table (order_id, description, s3_prefix)                 [Parquet]
 
-Every object request of the migration path (put here, head in validate,
-delete in cascade delete and in incremental_migration's tombstone pass)
-runs through ONE executor-side kernel, ``_per_object``: a ``mapInPandas``
+Every object request of the migration path runs through ONE
+executor-side kernel, ``_per_object``. Its callers: ``externalize_blobs``
+(put), ``validate_migration`` (head), ``cascade_delete`` (delete) and
+``incremental_migration.migrate_increment`` (put for a live row, head
+then delete for a tombstone, in cursor order). It is a ``mapInPandas``
 task that builds one object-store client (the reference's G1 batching
 lesson: credentials/clients per page, not per row) and keeps up to
 ``IN_FLIGHT`` (8) per-row requests in flight on it over its Arrow
@@ -70,6 +72,18 @@ WRITE_MANIFEST_SCHEMA = T.StructType(
         T.StructField("status", T.StringType()),  # written | rejected_oversize
     ]
 )
+
+
+def put_blob(store, key: str, blob) -> tuple[int, str | None, str]:
+    """Write one blob to ``key`` unless it is over the cap: the order.js:388
+    content-length-range rejection, flagged and never written. Returns
+    ``(n_bytes, md5 or None, status)``, status ``written`` or
+    ``rejected_oversize``."""
+    payload = bytes(blob)
+    if len(payload) > MAX_OBJECT_BYTES:
+        return len(payload), None, "rejected_oversize"
+    store.put(key, payload)
+    return len(payload), hashlib.md5(payload).hexdigest(), "written"
 
 
 def _map_in_flight(fn: Callable, rows: Iterable[tuple], key: Callable) -> list:
@@ -154,12 +168,8 @@ def externalize_blobs(
     order.js:174,273) and return the write manifest."""
 
     def put(store, oid, blob, key):
-        payload = bytes(blob)
-        if len(payload) > MAX_OBJECT_BYTES:
-            # order.js:388 content-length-range rejection: flag, skip
-            return (oid, None, len(payload), None, "rejected_oversize")
-        store.put(key, payload)
-        return (oid, key, len(payload), hashlib.md5(payload).hexdigest(), "written")
+        n_bytes, md5, status = put_blob(store, key, blob)
+        return (oid, key if status == "written" else None, n_bytes, md5, status)
 
     key = s3_object_key(pk, F.lit(s3_prefix)).alias("object_key")
     rows = legacy.select(pk, blob_col, key)

@@ -19,22 +19,30 @@ One pass (``migrate_increment``):
    different increment than the failed attempt. The increment's row
    count and ``max(cursor)`` are an ``Observation`` on this write; an
    empty increment returns here, before any object I/O.
-3. **Externalize blobs** — operators/blob_pipeline.externalize_blobs
-   over the staged copy (one store client per task, manifest receipt,
-   10 MB cap contract of order.js:388). Object keys are derived from
-   the PK, so re-writing after a crash overwrites the same keys:
-   idempotent. The ledger entry counts written and rejected objects.
-4. **Emit pointer rows** — the post-migration shape plus ``(run_id,
-   cursor)`` lineage columns, written to ``{target}/pointers/run=<id>``
-   (overwrite — a re-run of the same pass replaces its own output, it
-   never duplicates it).
-5. **Commit the watermark LAST** — a run-ledger JSON in ``state_path``
+3. **One object pass, whose output is the pointer run** — the staged
+   rows, sorted by cursor within each partition (a local sort, no
+   shuffle), run through blob_pipeline's object-I/O kernel (one store
+   client per task). A live row is put under the 10 MB cap of
+   order.js:388; a tombstone's object is deleted, after a head that
+   tells whether it was there. Rows of one key run in cursor order, so
+   a delete and a re-insert of one key leave the newer state, as the
+   reference's single walk does (lambda_fns/order_rdbms_blob.js:447-523).
+   Each row comes back as its pointer row — the post-migration shape
+   plus ``(cursor, run_id)`` lineage and ``is_deleted`` — and is written
+   to ``{target}/pointers/run=<id>`` (overwrite — a re-run of the same
+   pass replaces its own output, it never duplicates it). The ledger's
+   written, rejected and deleted object counts are an ``Observation``
+   on that write. Object keys are derived from the PK, so re-running
+   after a crash overwrites the same keys: idempotent. Open gap: two
+   versions of one key that land in *different* staged partitions run
+   in different tasks, so their object requests still race.
+4. **Commit the watermark LAST** — a run-ledger JSON in ``state_path``
    recording ``max(cursor)`` of the staged increment. Written via
    temp-file + atomic rename under the kernel flock lease
    (operators/mutation._writer_lock), so concurrent migrators serialize
    and a half-written ledger entry can never be read back.
 
-Crash anywhere before step 5 ⇒ the watermark is unchanged and the next
+Crash anywhere before step 4 ⇒ the watermark is unchanged and the next
 pass re-reads the same rows; every downstream effect is keyed
 (object keys by PK, pointer dirs by run id, staging dirs by run id), so
 re-execution converges — at-least-once passes with idempotent effects.
@@ -65,31 +73,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.scalars import DEFAULT_S3_PREFIX, s3_object_key
-from .blob_pipeline import _per_object, externalize_blobs
+from .blob_pipeline import _per_object, put_blob
 from .mutation import _writer_lock
 
 LEDGER_PREFIX = "run-"
-
-
-def _delete_objects(tombstones: DataFrame, store_url: str, pk: str) -> int:
-    """Tolerant distributed object delete for tombstoned keys (one store
-    client per task, same G1 batching as the writes). ``delete`` itself
-    is absence-tolerant (S3 returns 204 for a missing key), so the
-    returned audit counter comes from an A14 existence check first: it
-    counts keys whose object was PRESENT and removed — a retry that
-    finds them already gone reports 0 and is equally converged."""
-
-    def head_then_delete(store, key):
-        existed = store.head(key)
-        store.delete(key)
-        return (bool(existed),)
-
-    keys = tombstones.select(
-        s3_object_key(pk, F.lit(DEFAULT_S3_PREFIX)).alias("object_key")
-    )
-    results = _per_object(keys, store_url, head_then_delete,
-                          T.StructType([T.StructField("deleted", T.BooleanType())]))
-    return results.filter(F.col("deleted")).count()
 
 
 def _ledger_entries(state_path: str) -> list[dict]:
@@ -422,11 +409,12 @@ def migrate_increment(
     60 s point-write default) and then raises WriterLockTimeout.
 
     ``op_col`` enables source-side DELETE capture for append-only CDC
-    feeds whose rows carry an op marker ('D' = tombstone, anything else
-    = upsert). Tombstoned keys get their OBJECT deleted first (tolerant
-    — a retry after a crash finds it already gone) and then a pointer
-    tombstone row (``is_deleted = true``), the reference's S3-first
-    cascade ordering (order.js:346-351 / README.md:126) applied
+    feeds whose rows carry an op marker ('D' = tombstone, anything else,
+    NULL included, = upsert). Tombstoned keys get their OBJECT deleted
+    first (tolerant — a retry after a crash finds it already gone, and
+    ``n_objects_deleted`` counts only objects a head found) and then a
+    pointer tombstone row (``is_deleted = true``), the reference's
+    S3-first cascade ordering (order.js:346-351 / README.md:126) applied
     incrementally; ``read_current`` hides keys whose LATEST row is a
     tombstone while the history stays queryable until compaction."""
     os.makedirs(state_path, exist_ok=True)
@@ -454,31 +442,38 @@ def migrate_increment(
         if n_rows == 0:
             return {"run_id": run_id, "watermark": watermark, "n_rows": 0,
                     "committed": False}
-        staged = spark.read.parquet(staging)
-        is_tomb = (
-            F.col(op_col) == F.lit("D") if op_col else F.lit(False)
-        )
-        live = staged.filter(~is_tomb)
-        manifest = externalize_blobs(live, store_url, pk=pk, blob_col=blob_col)
-        n_written, n_rejected = manifest.agg(
-            F.count_if(F.col("status") == "written"),
-            F.count_if(F.col("status") == "rejected_oversize"),
-        ).collect()[0]
-        n_deleted = 0
-        if op_col:
-            # objects FIRST, pointer tombstones second (order.js:346-351
-            # ordering) — tolerant delete, so a crash-retry converges
-            n_deleted = _delete_objects(staged.filter(is_tomb), store_url, pk)
-        pointer_rows = staged.select(
+        is_tomb = F.col(op_col).eqNullSafe("D") if op_col else F.lit(False)
+        rows = spark.read.parquet(staging).select(
             F.col(pk).alias("order_id"),
             "description",
             F.col(cursor_col).alias("cursor"),
             F.lit(run_id).alias("run_id"),
             is_tomb.alias("is_deleted"),
-        )
-        pointer_rows.write.mode("overwrite").parquet(
+            blob_col,
+            s3_object_key(pk, F.lit(DEFAULT_S3_PREFIX)).alias("object_key"),
+        ).sortWithinPartitions("cursor")
+
+        def apply(store, *row):
+            # objects FIRST, the pointer row second (order.js:346-351);
+            # the delete is tolerant, so a crash-retry converges
+            *pointer, is_deleted, blob, key = row
+            if not is_deleted:
+                return (*pointer, is_deleted, put_blob(store, key, blob)[2])
+            existed = store.head(key)
+            store.delete(key)
+            return (*pointer, is_deleted, "deleted" if existed else "absent")
+
+        pointer_rows = _per_object(rows, store_url, apply, T.StructType(
+            rows.schema.fields[:-2] + [T.StructField("status", T.StringType())]
+        ))
+        objects = Observation()
+        pointer_rows.observe(objects, *[
+            F.count_if(F.col("status") == s).alias(s)
+            for s in ("written", "rejected_oversize", "deleted")
+        ]).drop("status").write.mode("overwrite").parquet(
             f"{target_path}/pointers/run={run_id}"
         )
+        counts = objects.get
         entry = {
             "run_id": run_id,
             "watermark": (
@@ -487,9 +482,9 @@ def migrate_increment(
                 else new_watermark
             ),
             "n_rows": n_rows,
-            "n_objects_written": n_written,
-            "n_objects_rejected": n_rejected,
-            "n_objects_deleted": n_deleted,
+            "n_objects_written": counts["written"],
+            "n_objects_rejected": counts["rejected_oversize"],
+            "n_objects_deleted": counts["deleted"],
             "committed": True,
         }
         _commit_run(state_path, entry)

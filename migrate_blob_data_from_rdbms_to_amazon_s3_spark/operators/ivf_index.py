@@ -37,6 +37,8 @@ one scan of the new batch + a partitioned append.
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -120,7 +122,7 @@ def _write_cells(assigned: DataFrame, path: str, gen: int, mode: str) -> int:
     )
     try:
         return int(obs.get["n"])
-    except Exception:
+    except (PySparkException, Py4JError):
         # a zero-task write (empty corpus — AQE coalesces the empty
         # shuffle to no partitions) produces no metrics row and obs.get
         # raises; recompute the count directly, which on that degenerate

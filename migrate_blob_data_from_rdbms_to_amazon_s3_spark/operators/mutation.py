@@ -103,9 +103,8 @@ class _writer_lock:
 
     - mutual exclusion is owned by the KERNEL, not by file content;
     - a crashed holder's lock evaporates with its process — no TTL, no
-      staleness guess, no preemption path at all (``ttl_s`` is retained
-      in the signature for API compatibility but unused: the situation
-      it guarded — a dead writer wedging the lease — cannot occur);
+      staleness guess, no preemption path at all (the situation a TTL
+      guarded — a dead writer wedging the lease — cannot occur);
     - a live-but-hung holder now blocks waiters until ``timeout_s`` and
       then fails LOUD (WriterLockTimeout) instead of being preempted
       mid-swap, which could interleave two directory swaps.
@@ -123,7 +122,7 @@ class _writer_lock:
     service; this protocol is the correct local/POSIX rendition of the
     same lease idea."""
 
-    def __init__(self, path: str, timeout_s: float = 60.0, ttl_s: float = 3600.0):
+    def __init__(self, path: str, timeout_s: float = 60.0):
         self._lock_path = f"{path.removeprefix('file:').rstrip('/')}.__lock"
         self._timeout_s = timeout_s
         self._fd: int | None = None
@@ -383,11 +382,6 @@ def recover(path: str) -> bool:
 
 
 def _recover(path: str, min_tmp_age_s: float = 600.0) -> bool:
-    import glob as _glob
-    import os
-    import shutil
-    import time
-
     local_path = path.removeprefix("file:").rstrip("/")
     with _writer_lock(path):
         return _recover_locked(local_path, min_tmp_age_s)

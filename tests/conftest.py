@@ -1,8 +1,10 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest lives in, so any copy of the repo tests itself
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark import get_spark
 

@@ -731,3 +731,76 @@ def test_versions_of_one_key_in_one_pass_leave_the_newest_object(spark, tmp_path
     e2 = migrate_increment(spark, source, **kw)
     assert e2["n_objects_deleted"] == 1
     assert not store.head("orders/id-0/image.png")
+
+
+def _derby_ops(spark, tmp_path):
+    """Embedded Derby CDC table with an op marker column; ``write`` keeps
+    the given row order (one partition), which is the source order."""
+    url = f"jdbc:derby:{tmp_path}/opsdb;create=true"
+
+    def write(rows, mode="append"):
+        spark.createDataFrame(
+            rows, "seq long, order_id string, description string, "
+            "order_blob binary, op string",
+        ).coalesce(1).write.format("jdbc").options(
+            url=url, dbtable="orders_ops", driver=DERBY_DRIVER
+        ).mode(mode).save()
+
+    source = JdbcSource(url=url, table="orders_ops", driver=DERBY_DRIVER)
+    store_url, target, state = _paths(tmp_path)
+    kw = dict(store_url=store_url, target_path=target, state_path=state,
+              cursor_col="seq", op_col="op")
+    return source, write, kw
+
+
+def test_reinsert_staged_before_its_tombstone_keeps_the_object(spark, tmp_path):
+    """One increment holds a re-insert of ``a`` and, after it in source
+    order, a tombstone of ``a`` with the lower cursor. Object requests
+    follow cursor order, so ``a`` ends live at the re-insert with its
+    object stored, not deleted by the older tombstone."""
+    source, write, kw = _derby_ops(spark, tmp_path)
+    write([(1, "a", "v1", b"1" * 16, "I")], mode="overwrite")
+    migrate_increment(spark, source.load(spark), **kw)
+    write([(3, "a", "v2", b"2" * 16, "I"), (2, "a", None, None, "D")])
+    e = migrate_increment(spark, source.load(spark), **kw)
+    assert (e["n_rows"], e["n_objects_written"], e["n_objects_deleted"]) == (2, 1, 1)
+    assert make_store(kw["store_url"]).get("orders/a/image.png") == b"2" * 16
+    cur = read_current(spark, kw["target_path"], state_path=kw["state_path"])
+    assert {r["order_id"]: r["description"] for r in cur.collect()} == {"a": "v2"}
+
+
+def test_null_op_row_is_live_with_its_object(spark, tmp_path):
+    """A CDC row whose op is NULL is not a tombstone (only 'D' is): its
+    object is written and counted, and its pointer row is live."""
+    source, write, kw = _derby_ops(spark, tmp_path)
+    write([(1, "a", "no op", b"a" * 8, None), (2, "b", "insert", b"b" * 8, "I")],
+          mode="overwrite")
+    e = migrate_increment(spark, source.load(spark), **kw)
+    assert (e["n_objects_written"], e["n_objects_deleted"]) == (2, 0)
+    assert make_store(kw["store_url"]).get("orders/a/image.png") == b"a" * 8
+    run = spark.read.parquet(f"{kw['target_path']}/pointers/run=0")
+    assert {r["order_id"]: r["is_deleted"] for r in run.collect()} == {
+        "a": False, "b": False}
+
+
+def test_cdc_pass_is_at_most_three_spark_jobs(spark, tmp_path):
+    """A CDC pass with live rows and tombstones is the staging write, its
+    read-back and the one object pass that writes the pointer run,
+    counted per job group the way the benchmark's tracer counts them."""
+    source, write, kw = _derby_ops(spark, tmp_path)
+    write([(i, f"id-{i}", f"desc {i}", bytes([i]) * 32, "I") for i in range(1, 6)],
+          mode="overwrite")
+    migrate_increment(spark, source.load(spark), **kw)
+    write([(6, "id-2", None, None, "D"), (7, "id-3", "v2", b"v2", "U"),
+           (8, "id-9", "new", b"new", "I")])
+    df = source.load(spark)
+    sc = spark.sparkContext
+    group = f"cdc-pass-{tmp_path.name}"
+    sc.setJobGroup(group, "one CDC pass")
+    try:
+        e = migrate_increment(spark, df, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert (e["n_rows"], e["n_objects_written"], e["n_objects_deleted"]) == (3, 2, 1)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
