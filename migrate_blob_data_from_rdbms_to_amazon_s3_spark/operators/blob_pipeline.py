@@ -142,7 +142,16 @@ def _per_object(rows: DataFrame, store_url: str, fn, schema: T.StructType) -> Da
     there (6.8 / 6.7 / 6.6 s, medians of 3 runs) because the local moto
     server, not the round trips, is then the limit. Whether a real
     store's longer round trips gain more from 8 than from 4 is
-    unmeasured."""
+    unmeasured.
+
+    Each task also pays a fixed cost before ``fn`` first runs: Spark's
+    hand-off to a Python worker plus the client build. On a 4-core host
+    a trivial 100-row ``mapInPandas`` task ran 140-270 ms with PySpark's
+    own daemon, most of it re-reading ``pyspark.zip``'s directory,
+    and ~55 ms with the package's ``worker_daemon`` (``session.py``). A
+    small increment is dominated by this per-task cost, not by its rows,
+    so callers should not split tiny inputs over more tasks than their
+    I/O needs."""
     names = schema.fieldNames()
     key = itemgetter(rows.columns.index("object_key"))
 

@@ -18,7 +18,10 @@ One pass (``migrate_increment``):
    both derive from the immutable staged copy, so a retry never sees a
    different increment than the failed attempt. The increment's row
    count and ``max(cursor)`` are an ``Observation`` on this write; an
-   empty increment returns here, before any object I/O.
+   empty increment returns here, before any object I/O. The staged copy
+   is read back with the increment's own schema, so no schema-inference
+   job runs (on a 4-core host, building a read of a 100-row run took
+   ~115 ms with inference and ~17 ms with the schema given).
 3. **One object pass, whose output is the pointer run** — the staged
    rows, sorted by cursor within each partition (a local sort, no
    shuffle), run through blob_pipeline's object-I/O kernel (one store
@@ -37,7 +40,8 @@ One pass (``migrate_increment``):
    versions of one key that land in *different* staged partitions run
    in different tasks, so their object requests still race.
 4. **Commit the watermark LAST** — a run-ledger JSON in ``state_path``
-   recording ``max(cursor)`` of the staged increment. Written via
+   recording ``max(cursor)`` of the staged increment and the pointer
+   run's schema (``schema``, a ``StructType`` JSON string). Written via
    temp-file + atomic rename under the kernel flock lease
    (operators/mutation._writer_lock), so concurrent migrators serialize
    and a half-written ledger entry can never be read back.
@@ -57,7 +61,12 @@ order by cursor desc, run_id desc) = 1`` — so a key UPDATEd in a later
 increment shadows its older pointer row without any rewrite of earlier
 runs. Pass ``state_path`` for READ COMMITTED (only ledger-committed
 runs are scanned); without it the view is documented READ UNCOMMITTED
-(every run dir on disk, including crashed passes' increments). The same
+(every run dir on disk, including crashed passes' increments). Committed
+reads (``read_current`` with the ledger, ``read_as_of``, compaction)
+read the runs with the schema of the newest committed entry among them
+that records one, so building the view launches no Spark job; only
+READ UNCOMMITTED and ledgers written before entries carried a schema
+infer it from the files. The same
 transform is registered as the value-oracled
 ``incremental_pointer_latest`` query (plans/parity twin discipline).
 """
@@ -117,12 +126,16 @@ def _run_dirs(pointers_root: str) -> dict[int, str]:
     ))
 
 
-def _committed_run_dirs(state_path: str, runs: dict[int, str]) -> list[str]:
-    """Those of ``runs`` whose id appears in the committed ledger (a
-    committed run's dir may legitimately be gone after a later compaction
-    swept it)."""
-    ids = {e["run_id"] for e in _ledger_entries(state_path)}
-    return [d for i, d in runs.items() if i in ids]
+def _run_schema(entries: list[dict], ids) -> T.StructType | None:
+    """The pointer-run schema recorded by the newest of ``entries`` whose
+    run id is in ``ids``, or None when none records one (a ledger written
+    before entries carried it): the reader then infers it from the
+    files, one more Spark job."""
+    recorded = [e for e in entries if e["run_id"] in ids and e.get("schema")]
+    if not recorded:
+        return None
+    newest = max(recorded, key=lambda e: e["run_id"])
+    return T.StructType.fromJson(json.loads(newest["schema"]))
 
 
 def _commit_run(state_path: str, entry: dict) -> None:
@@ -155,17 +168,32 @@ def keep_latest(pointers: DataFrame, pk: str = "order_id",
 
 
 def _live_view(spark: SparkSession, paths: list[str], pk: str,
-               cursor_col: str) -> DataFrame:
-    """Read pointer-run ``paths`` → drop the Hive ``run`` column →
+               cursor_col: str, schema: T.StructType | None = None) -> DataFrame:
+    """Read pointer-run ``paths`` (with ``schema`` when the ledger records
+    it, so no inference job runs) → drop the Hive ``run`` column →
     keep-latest per key → hide keys whose LATEST row is a tombstone (its
     history stays in the runs until compaction sweeps it)."""
-    pointers = spark.read.parquet(*paths)
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    pointers = reader.parquet(*paths)
     if "run" in pointers.columns:
         pointers = pointers.drop("run")
     latest = keep_latest(pointers, pk, cursor_col)
     if "is_deleted" in latest.columns:
         latest = latest.filter(~F.coalesce(F.col("is_deleted"), F.lit(False)))
     return latest
+
+
+def _committed_view(spark: SparkSession, state_path: str, runs: dict[int, str],
+                    pk: str, cursor_col: str) -> DataFrame | None:
+    """The live view over those of ``runs`` whose id appears in the
+    committed ledger (a committed run's dir may legitimately be gone
+    after a later compaction swept it), or None when there are none."""
+    entries = _ledger_entries(state_path)
+    ids = sorted({e["run_id"] for e in entries} & runs.keys())
+    if not ids:
+        return None
+    return _live_view(spark, [runs[i] for i in ids], pk, cursor_col,
+                      _run_schema(entries, ids))
 
 
 def read_current(spark: SparkSession, target_path: str, pk: str = "order_id",
@@ -191,13 +219,14 @@ def read_current(spark: SparkSession, target_path: str, pk: str = "order_id",
     pointers_root = f"{target_path}/pointers"
     if state_path is None:
         return _live_view(spark, [pointers_root], pk, cursor_col)
-    committed = _committed_run_dirs(state_path, _run_dirs(pointers_root))
-    if not committed:
+    view = _committed_view(spark, state_path, _run_dirs(pointers_root), pk,
+                           cursor_col)
+    if view is None:
         raise FileNotFoundError(
             f"no committed pointer runs under {pointers_root} "
             f"(ledger: {state_path})"
         )
-    return _live_view(spark, committed, pk, cursor_col)
+    return view
 
 
 class CompactionHorizonError(RuntimeError):
@@ -257,7 +286,8 @@ def read_as_of(spark: SparkSession, target_path: str, run_id: int,
             f"disk (outside any committed compaction's sweep — storage loss, "
             f"not history retention)"
         )
-    return _live_view(spark, [runs[i] for i in wanted], pk, cursor_col)
+    return _live_view(spark, [runs[i] for i in wanted], pk, cursor_col,
+                      _run_schema(entries, wanted))
 
 
 def compact_pointer_runs(
@@ -302,19 +332,20 @@ def compact_pointer_runs(
         watermark, run_id = current_watermark(state_path)
         pointers_root = f"{target_path}/pointers"
         runs = _run_dirs(pointers_root)
-        committed = _committed_run_dirs(state_path, runs)
-        if not committed:
+        current = _committed_view(spark, state_path, runs, pk, cursor_col)
+        if current is None:
             # nothing committed to compact — dirty dirs (if any) belong
             # to crashed passes whose retries will rewrite them
             return {"run_id": run_id, "n_rows": 0, "compaction": True,
                     "committed": False}
         # never reuse a dir of unknown provenance
         run_id = max(run_id, max(runs) + 1)
-        current = _live_view(spark, committed, pk, cursor_col)
-        n_rows = current.count()
-        current.write.mode("overwrite").parquet(f"{pointers_root}/run={run_id}")
-        entry = {"run_id": run_id, "watermark": watermark, "n_rows": n_rows,
-                 "compaction": True, "committed": True}
+        obs = Observation()
+        current.observe(obs, F.count(F.lit(1)).alias("n_rows")).write.mode(
+            "overwrite").parquet(f"{pointers_root}/run={run_id}")
+        entry = {"run_id": run_id, "watermark": watermark,
+                 "n_rows": obs.get["n_rows"], "compaction": True,
+                 "committed": True, "schema": current.schema.json()}
         _commit_run(state_path, entry)
         for path in runs.values():  # commit is durable: now drop the history
             shutil.rmtree(path, ignore_errors=True)
@@ -443,7 +474,7 @@ def migrate_increment(
             return {"run_id": run_id, "watermark": watermark, "n_rows": 0,
                     "committed": False}
         is_tomb = F.col(op_col).eqNullSafe("D") if op_col else F.lit(False)
-        rows = spark.read.parquet(staging).select(
+        rows = spark.read.schema(increment.schema).parquet(staging).select(
             F.col(pk).alias("order_id"),
             "description",
             F.col(cursor_col).alias("cursor"),
@@ -463,8 +494,9 @@ def migrate_increment(
             store.delete(key)
             return (*pointer, is_deleted, "deleted" if existed else "absent")
 
+        run_schema = T.StructType(rows.schema.fields[:-2])
         pointer_rows = _per_object(rows, store_url, apply, T.StructType(
-            rows.schema.fields[:-2] + [T.StructField("status", T.StringType())]
+            run_schema.fields + [T.StructField("status", T.StringType())]
         ))
         objects = Observation()
         pointer_rows.observe(objects, *[
@@ -486,6 +518,7 @@ def migrate_increment(
             "n_objects_rejected": counts["rejected_oversize"],
             "n_objects_deleted": counts["deleted"],
             "committed": True,
+            "schema": run_schema.json(),
         }
         _commit_run(state_path, entry)
         return entry

@@ -11,6 +11,15 @@ configuration encodes the scale decisions:
 - Arrow enabled so the Pandas-UDF slow path is batch-columnar, never row-wise.
 - UTC session timezone so timestamp semantics are engine-independent
   (matters for the DuckDB oracle comparison).
+- Python workers forked from this package's ``worker_daemon``. Under
+  PySpark's own daemon every Python-UDF task first re-parses the
+  directory of each zip archive the worker imports from
+  (``pyspark.zip``, the spark-core jar): on a 4-core host a trivial
+  100-row ``mapInPandas`` task ran 140-270 ms (a plain JVM task: 2 ms).
+  The package's daemon re-reads an archive only when it changed, and
+  the same task runs in about 55 ms. Executors must therefore be able
+  to import this package, which every kernel of it (``mapInPandas``/UDF
+  bodies defined in its modules) already requires.
 """
 
 from __future__ import annotations
@@ -64,6 +73,7 @@ def get_spark(app_name: str = "rdbms-blob-s3-spark", cpus: str | int | None = No
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):

@@ -23,13 +23,16 @@ import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.blob_pipeline import (
     MAX_OBJECT_BYTES,
 )
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.incremental_migration import (
+    compact_pointer_runs,
     current_watermark,
     migrate_increment,
+    read_as_of,
     read_current,
 )
 from migrate_blob_data_from_rdbms_to_amazon_s3_spark.sources.jdbc import JdbcSource
@@ -82,6 +85,11 @@ def test_incremental_passes_and_keep_latest(spark, derby_cdc, tmp_path):
         spark, source, store_url=store_url, target_path=target,
         state_path=state, cursor_col="seq",
     )
+    # the pointer run's schema as written (a read makes every field nullable)
+    run_schema = T.StructType.fromJson(json.loads(e1.pop("schema")))
+    on_disk = spark.read.parquet(f"{target}/pointers/run=0").schema
+    assert [(f.name, f.dataType) for f in run_schema] == [
+        (f.name, f.dataType) for f in on_disk]
     assert e1 == {"run_id": 0, "watermark": 10, "n_rows": 10,
                   "n_objects_written": 10, "n_objects_rejected": 0,
                   "n_objects_deleted": 0, "committed": True}
@@ -783,10 +791,23 @@ def test_null_op_row_is_live_with_its_object(spark, tmp_path):
         "a": False, "b": False}
 
 
-def test_cdc_pass_is_at_most_three_spark_jobs(spark, tmp_path):
-    """A CDC pass with live rows and tombstones is the staging write, its
-    read-back and the one object pass that writes the pointer run,
-    counted per job group the way the benchmark's tracer counts them."""
+def _job_ids(spark, group: str, fn):
+    """Spark job ids that ``fn()`` launches, run in job group ``group``
+    (counted the way the benchmark's tracer counts them)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cdc_pass_is_at_most_two_spark_jobs(spark, tmp_path):
+    """A CDC pass with live rows and tombstones is the staging write and
+    the one object pass that writes the pointer run: the staged copy is
+    read back with the increment's schema, so no inference job runs."""
     source, write, kw = _derby_ops(spark, tmp_path)
     write([(i, f"id-{i}", f"desc {i}", bytes([i]) * 32, "I") for i in range(1, 6)],
           mode="overwrite")
@@ -794,13 +815,104 @@ def test_cdc_pass_is_at_most_three_spark_jobs(spark, tmp_path):
     write([(6, "id-2", None, None, "D"), (7, "id-3", "v2", b"v2", "U"),
            (8, "id-9", "new", b"new", "I")])
     df = source.load(spark)
-    sc = spark.sparkContext
-    group = f"cdc-pass-{tmp_path.name}"
-    sc.setJobGroup(group, "one CDC pass")
+    out = {}
+    jobs = _job_ids(spark, f"cdc-pass-{tmp_path.name}",
+                    lambda: out.update(migrate_increment(spark, df, **kw)))
+    assert (out["n_rows"], out["n_objects_written"], out["n_objects_deleted"]) == (3, 2, 1)
+    assert 1 <= len(jobs) <= 2
+
+
+def _two_passes_and_a_compaction(spark, tmp_path):
+    """A Derby CDC source migrated in two passes (the second updates one
+    key and tombstones another), then compacted, then one more pass."""
+    source, write, kw = _derby_ops(spark, tmp_path)
+    write([(i, f"id-{i}", f"desc {i}", bytes([i]) * 16, "I") for i in range(1, 6)],
+          mode="overwrite")
+    migrate_increment(spark, source.load(spark), **kw)
+    write([(6, "id-2", None, None, "D"), (7, "id-3", "v2", b"v2", "U")])
+    migrate_increment(spark, source.load(spark), **kw)
+    compact_pointer_runs(spark, kw["target_path"], kw["state_path"])
+    write([(8, "id-9", "new", b"new", "I")])
+    migrate_increment(spark, source.load(spark), **kw)
+    return kw["target_path"], kw["state_path"]
+
+
+def _ledger(state):
+    entries = []
+    for name in sorted(os.listdir(state)):
+        if name.startswith("run-"):
+            with open(os.path.join(state, name)) as fh:
+                entries.append(json.load(fh))
+    return entries
+
+
+def _views(spark, target, state):
+    """read_current, and read_as_of of the compaction and the pass after
+    it (the versions still reconstructible)."""
+    views = {"current": read_current(spark, target, state_path=state)}
+    for e in _ledger(state)[-2:]:
+        views[e["run_id"]] = read_as_of(spark, target, e["run_id"], state_path=state)
+    return views
+
+
+def test_committed_reads_launch_no_job_before_the_action(spark, tmp_path):
+    """Every committed ledger entry records its pointer run's schema, so
+    building read_current or read_as_of over it reads no file footer:
+    no Spark job runs until the caller's action."""
+    target, state = _two_passes_and_a_compaction(spark, tmp_path)
+    assert all("schema" in e for e in _ledger(state))
+    views = {}
+    jobs = _job_ids(spark, f"views-{tmp_path.name}",
+                    lambda: views.update(_views(spark, target, state)))
+    assert jobs == []
+    assert {r["order_id"] for r in views["current"].collect()} == {
+        "id-1", "id-3", "id-4", "id-5", "id-9"}
+
+
+def test_ledger_without_schemas_reads_identical_rows(spark, tmp_path):
+    """A ledger written before entries carried a schema: every view
+    infers it from the files and returns the same rows and schema."""
+    target, state = _two_passes_and_a_compaction(spark, tmp_path)
+
+    def snapshot():
+        return {k: (v.schema, sorted(v.collect()))
+                for k, v in _views(spark, target, state).items()}
+
+    recorded = snapshot()
+    for entry in _ledger(state):
+        del entry["schema"]
+        with open(os.path.join(state, f"run-{entry['run_id']:08d}.json"), "w") as fh:
+            json.dump(entry, fh)
+    assert snapshot() == recorded
+    ce = compact_pointer_runs(spark, target, state)
+    assert T.StructType.fromJson(json.loads(ce["schema"])) == recorded["current"][0]
+    cur = read_current(spark, target, state_path=state)
+    assert (cur.schema, sorted(cur.collect())) == recorded["current"]
+
+
+def test_char_varchar_source_reads_back_as_inference_does(spark, tmp_path):
+    """Derby CHAR/VARCHAR columns carry char/varchar metadata into the
+    increment's and the pointer run's schema; the reads given those
+    schemas return the rows and schema that inference returns."""
+    url = f"jdbc:derby:{tmp_path}/vcdb;create=true"
+    conn = spark._jvm.java.sql.DriverManager.getConnection(url)
     try:
-        e = migrate_increment(spark, df, **kw)
+        st = conn.createStatement()
+        st.execute("CREATE TABLE orders_vc (seq BIGINT, order_id CHAR(8), "
+                   "description VARCHAR(32), order_blob BLOB)")
+        st.execute("INSERT INTO orders_vc VALUES (1, 'a', 'one', CAST(X'01' AS BLOB)), "
+                   "(2, 'bb', NULL, CAST(X'0202' AS BLOB))")
     finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert (e["n_rows"], e["n_objects_written"], e["n_objects_deleted"]) == (3, 2, 1)
-    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+        conn.close()
+    store_url, target, state = _paths(tmp_path)
+    source = JdbcSource(url=url, table="orders_vc", driver=DERBY_DRIVER).load(spark)
+    e = migrate_increment(spark, source, store_url=store_url, target_path=target,
+                          state_path=state, cursor_col="seq")
+    assert (e["n_rows"], e["n_objects_written"]) == (2, 2)
+    assert "varchar(32)" in e["schema"]
+    given = read_current(spark, target, state_path=state)
+    inferred = read_current(spark, target)  # READ UNCOMMITTED infers
+    assert given.schema == inferred.schema
+    assert sorted(given.collect()) == sorted(inferred.collect())
+    assert sorted((r[0], r[1]) for r in given.collect()) == [("a       ", "one"),
+                                                            ("bb      ", None)]
