@@ -200,11 +200,13 @@ class CorpusPipeline:
         return {"migration": entry, "index": audit}
 
     def _ensure_index(self) -> None:
-        import os
+        """Build an empty text index when ``index_path`` (driver-local)
+        holds none; an index this engine cannot read raises ValueError."""
+        from .operators.text_index import build_text_index, read_meta
 
-        from .operators.text_index import build_text_index
-
-        if not os.path.isdir(f"{self.index_path}/meta"):
+        try:
+            read_meta(self.spark, self.index_path)
+        except FileNotFoundError:
             empty = self.spark.createDataFrame([], "doc_id long, text string")
             build_text_index(empty, self.index_path)
 
@@ -232,15 +234,21 @@ class CorpusPipeline:
         runs = self.spark.createDataFrame(
             [(int(r),) for r in committed] or [], "run_id int"
         )
-        # Stream schema comes from the pointer files themselves (r11
-        # advice: the facade must not hard-code one pipeline's column
-        # layout — the text column is configurable and the `cursor`
-        # lineage column's TYPE follows the source's cursor_col, e.g. a
-        # timestamp watermark). The index doc id must be integral —
-        # fail loudly otherwise instead of a deep gate error.
+        # Stream schema is the pointer runs' own (r11 advice: the facade
+        # must not hard-code one pipeline's column layout — the text
+        # column is configurable and the `cursor` lineage column's TYPE
+        # follows the source's cursor_col, e.g. a timestamp watermark):
+        # the one the ledger records for the committed runs, inferred
+        # from the files only for a ledger whose entries record none.
+        # The index doc id must be integral — fail loudly otherwise
+        # instead of a deep gate error.
         from pyspark.sql.types import IntegerType, LongType
 
-        schema = self.spark.read.parquet(f"{self.target_path}/pointers").schema
+        from .operators.incremental_migration import _ledger_entries, _run_schema
+
+        schema = _run_schema(_ledger_entries(self.state_path), set(committed))
+        if schema is None:
+            schema = self.spark.read.parquet(f"{self.target_path}/pointers").schema
         if not isinstance(schema["cursor"].dataType, (IntegerType, LongType)):
             raise TypeError(
                 f"CorpusPipeline.ingest_pending needs an integral cursor "

@@ -21,9 +21,11 @@ pair of Parquet tables:
   join's build side is collocated; ``register_bands_bucketed`` writes
   the same rows as a catalog table BUCKETED by (tab, bv) — on a real
   cluster that shape makes the probe join shuffle the probe side only.
-- ``{path}/meta`` — a 1-row Parquet: layout version, corpus count, the
-  derived config, and the embedding dim — the compatibility contract a
-  probe checks before trusting the index.
+- ``{path}/meta.json`` — layout version, corpus count, the derived
+  config, and the embedding dim: the compatibility contract a probe
+  checks before trusting the index. Committed last by atomic rename and
+  read without a Spark job (operators/persisted_index, the lifecycle all
+  three persisted indexes share); ``path`` is driver-local.
 
 Incremental widening rides the FROZEN plane layout
 (plans/similarity._ND_PLANE_IDX: plane (t, f) never changes once
@@ -43,20 +45,13 @@ a kernel over only the new planes.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
-from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.local_frame import arrow_local_df
 from ..plans import similarity as S
+from . import persisted_index as P
 
 INDEX_VERSION = 1
-
-_META_SCHEMA = (
-    "version long, n_vectors long, nd_bits long, nd_tables long, "
-    "recommended_bits long, emb_dim long, has_label boolean"
-)
 
 
 def _derived_tables(bits: int) -> int:
@@ -71,8 +66,12 @@ def _forced_cfg(spark: SparkSession, bits: int, tables: int):
     standing index's width is an OPERATOR choice; the corpus-derived
     default is what you get with bits=None). Witnessed bounded: a
     1-row literal range."""
-    assert S.ND_MIN_BITS <= bits <= S.ND_MAX_BITS, bits
-    assert S.ND_BANDS_MIN <= tables <= S.ND_BANDS, tables
+    if not (S.ND_MIN_BITS <= bits <= S.ND_MAX_BITS
+            and S.ND_BANDS_MIN <= tables <= S.ND_BANDS):
+        raise ValueError(
+            f"bits {bits} / tables {tables} outside [{S.ND_MIN_BITS}, "
+            f"{S.ND_MAX_BITS}] / [{S.ND_BANDS_MIN}, {S.ND_BANDS}]"
+        )
     return F.broadcast(
         spark.range(1).select(
             F.lit(bits).cast("int").alias("nd_bits"),
@@ -105,6 +104,18 @@ def _band_rows(sigs: DataFrame, label: bool) -> DataFrame:
     return bands
 
 
+def _write_bands(sigs: DataFrame, label: bool, path: str) -> None:
+    """``{path}/bands`` from a signatures frame, laid out by (tab, bv):
+    a probe join reads each bucket's rows from one split. Plain Parquet
+    (no catalog dependency for the driver's vanilla session);
+    register_bands_bucketed adds the catalog-bucketed twin of the same
+    rows."""
+    bands = _band_rows(sigs, label).repartition(F.col("tab"), F.col("bv"))
+    bands.sortWithinPartitions("tab", "bv").write.mode("overwrite").parquet(
+        f"{path}/bands"
+    )
+
+
 def build_ann_index(
     emb: DataFrame,
     path: str,
@@ -129,36 +140,21 @@ def build_ann_index(
     # READ-BACK, never from this frame), so the default checkpoint only
     # added an eager planning + kernel pass per build (r13)
     sigs = S._nd_sigs(emb, cols, cfg=cfg, emit_dots=True, barrier=False)
-    # count + config ride the WRITE as an Observation (r12): the
-    # previous count()/limit(1) jobs re-scanned the just-written table —
-    # at 100 TB a full extra pass. nd_bits/nd_tables are constant across
-    # rows (1-row broadcast cfg), so max == the head value.
-    obs = Observation()
-    sigs.observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.max("nd_bits").alias("b"),
-        F.max("nd_tables").alias("t"),
-    ).write.mode("overwrite").parquet(f"{path}/signatures")
-    sigs_back = spark.read.parquet(f"{path}/signatures")
-    try:
-        got = obs.get
-        n = int(got["n"])
-    except (PySparkException, Py4JError):
-        # a zero-task write (empty corpus) produces no metrics row and
-        # obs.get raises; fall back to the read-back count, trivially
-        # cheap on that degenerate path
-        got = {"b": None, "t": None}
-        n = sigs_back.count()
-    bands = _band_rows(sigs_back, label=label_col is not None)
-    # (tab, bv) layout: a probe join reads each bucket's rows from one
-    # split. Plain Parquet here (no catalog dependency for the driver's
-    # vanilla session); register_bands_bucketed adds the catalog-bucketed
-    # twin of the same rows.
-    bands.repartition(F.col("tab"), F.col("bv")).sortWithinPartitions(
-        "tab", "bv"
-    ).write.mode("overwrite").parquet(f"{path}/bands")
-    meta = {
+    # count + config ride the WRITE (r12): nd_bits/nd_tables are
+    # constant across rows (1-row broadcast cfg), so max == the head
+    # value; both are None when an empty write posts no metrics row
+    got = P.counted_write(
+        sigs,
+        lambda d: d.write.mode("overwrite").parquet(f"{path}/signatures"),
+        b=F.max("nd_bits"),
+        t=F.max("nd_tables"),
+    )
+    # the band table derives from the parquet READ-BACK
+    _write_bands(
+        spark.read.parquet(f"{path}/signatures"), label_col is not None, path
+    )
+    n = int(got["n"])
+    return P.write_meta(path, {
         "version": INDEX_VERSION,
         "n_vectors": n,
         "nd_bits": int(got["b"]) if got["b"] is not None else (bits or 0),
@@ -168,22 +164,11 @@ def build_ann_index(
         "recommended_bits": S.nd_recommended_bits(n),
         "emb_dim": S.EMB_DIM,
         "has_label": label_col is not None,
-    }
-    arrow_local_df(spark, [meta], _META_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/meta")
-    return meta
+    })
 
 
 def read_meta(spark: SparkSession, path: str) -> dict:
-    # explicit schema: an inferred json read is a second full pass over
-    # the file (schema inference job + the collect)
-    row = spark.read.schema(_META_SCHEMA).json(f"{path}/meta").collect()[0].asDict()
-    assert int(row["version"]) == INDEX_VERSION, (
-        f"index layout v{row['version']} != engine v{INDEX_VERSION}"
-    )
-    assert int(row["emb_dim"]) == S.EMB_DIM
-    return row
+    return P.read_meta(path, INDEX_VERSION, emb_dim=S.EMB_DIM)
 
 
 def load_signatures(spark: SparkSession, path: str) -> DataFrame:
@@ -222,8 +207,8 @@ def knn_join_persisted(
 
 def neardup_persisted(spark: SparkSession, emb: DataFrame, path: str) -> DataFrame:
     """q_neardup_embedding over a standing label-carrying index."""
-    meta = read_meta(spark, path)
-    assert meta["has_label"], "neardup needs an index built with label_col"
+    if not read_meta(spark, path)["has_label"]:
+        raise ValueError(f"neardup needs an index built with label_col: {path}")
     sigs = load_signatures(spark, path)
     exact = load_capped_bands(spark, path, label=True)
     return S._neardup_from_index(emb, sigs, exact)
@@ -248,7 +233,8 @@ def neardup_incremental(
     (the index stores signatures, not embeddings — at 100 TB that is the
     standing corpus table the index was built from)."""
     meta = read_meta(spark, path)
-    assert meta["has_label"], "incremental neardup needs a label index"
+    if not meta["has_label"]:
+        raise ValueError(f"incremental neardup needs a label index: {path}")
     if int(meta["n_vectors"]) == 0:
         # an EMPTY registry records nd_bits 0 (no derived config exists);
         # nothing can near-duplicate it — typed empty result
@@ -296,7 +282,8 @@ def freshness_audit(spark: SparkSession, emb: DataFrame, path: str) -> dict:
     contract as operators/ivf_index.freshness_audit: ``n_missing`` > 0 →
     the delta needs indexing (signatures for just those rows, bands
     appended — the widen kernel's sibling move); ``n_orphaned`` > 0 →
-    corpus rewritten: rebuild. Id-column-only anti-joins.
+    corpus rewritten: rebuild. One id-column-only job
+    (persisted_index.coverage).
 
     r12 (verdict item 3): the audit also closes the WIDTH loop —
     ``recommended_bits`` is the corpus-count-derived policy width for
@@ -307,36 +294,13 @@ def freshness_audit(spark: SparkSession, emb: DataFrame, path: str) -> dict:
     SOAK_r11), which restamps the meta and clears the flag. An empty
     live corpus never raises the flag (nothing to probe)."""
     meta = read_meta(spark, path)
-    # ONE job for all three counts (r12): full-outer join the two
-    # unique-id sets and aggregate membership markers — the previous
-    # shape paid two anti-join jobs plus a count job, i.e. three scans
-    # of each side. vec_id is unique on both sides by contract (the
-    # corpus PK and the index's one-row-per-vector signatures), so the
-    # outer join is row-preserving and the counts are identical.
-    indexed = load_signatures(spark, path).select(
-        "vec_id", F.lit(1).alias("__i")
-    )
-    live = emb.select("vec_id", F.lit(1).alias("__l"))
-    r = (
-        live.join(indexed, "vec_id", "full_outer")
-        .agg(
-            F.count("__l").alias("n_live"),
-            F.count(F.when(F.col("__i").isNull(), 1)).alias("n_missing"),
-            F.count(F.when(F.col("__l").isNull(), 1)).alias("n_orphaned"),
-        )
-        .collect()[0]
-    )
-    n_live, n_missing, n_orphaned = int(r["n_live"]), int(r["n_missing"]), int(r["n_orphaned"])
-    rec = S.nd_recommended_bits(n_live)
+    cov = P.coverage(meta["n_vectors"], emb, load_signatures(spark, path))
+    rec = S.nd_recommended_bits(cov["n_live"])
     return {
-        "n_indexed": int(meta["n_vectors"]),
-        "n_live": n_live,
-        "n_missing": n_missing,
-        "n_orphaned": n_orphaned,
-        "stale": bool(n_missing or n_orphaned),
-        "nd_bits": int(meta["nd_bits"]),
+        **cov,
+        "nd_bits": meta["nd_bits"],
         "recommended_bits": rec,
-        "stale_width": bool(n_live) and rec > int(meta["nd_bits"]),
+        "stale_width": bool(cov["n_live"]) and rec > meta["nd_bits"],
     }
 
 
@@ -433,9 +397,8 @@ def widen_ann_index(
     old_bits, old_tables = int(meta["nd_bits"]), int(meta["nd_tables"])
     if tables is None:
         tables = _derived_tables(bits)
-    assert bits >= old_bits and tables >= old_tables, (
-        f"widen only: ({old_bits},{old_tables}) -> ({bits},{tables})"
-    )
+    if bits < old_bits or tables < old_tables:
+        raise ValueError(f"widen only: ({old_bits},{old_tables}) -> ({bits},{tables})")
     label = bool(meta["has_label"])
     cols = ["vec_id"] + (["label"] if label else [])
     old_sigs = load_signatures(spark, path)
@@ -457,44 +420,17 @@ def widen_ann_index(
     widened = joined.mapInPandas(
         _widen_kernel(old_bits, old_tables, bits, tables), schema
     )
-    obs = Observation()
-    widened.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(f"{out_path}/signatures")
-    back = spark.read.parquet(f"{out_path}/signatures")
-    try:
-        n_back = int(obs.get["n"])
-    except (PySparkException, Py4JError):
-        # zero-task write (empty index): no metrics row — read-back
-        # count is trivially cheap on that degenerate path
-        n_back = back.count()
-    _band_rows(back, label=label).repartition(
-        F.col("tab"), F.col("bv")
-    ).sortWithinPartitions("tab", "bv").write.mode("overwrite").parquet(
-        f"{out_path}/bands"
-    )
-    new_meta = dict(meta)
-    new_meta.update(
-        {
-            "nd_bits": bits,
-            "nd_tables": tables,
-            "n_vectors": n_back,
-            # the corpus the index HOLDS is unchanged by a widen; the
-            # policy width is restamped from it so a widen to >= this
-            # value clears the audit's stale_width flag
-            "recommended_bits": S.nd_recommended_bits(n_back),
-        }
-    )
-    new_meta = {
-        k: new_meta[k]
-        for k in (
-            "version", "n_vectors", "nd_bits", "nd_tables",
-            "recommended_bits", "emb_dim", "has_label",
-        )
-    }
-    new_meta["version"] = int(new_meta["version"])
-    new_meta["emb_dim"] = int(new_meta["emb_dim"])
-    arrow_local_df(spark, [new_meta], _META_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{out_path}/meta")
-    return new_meta
+    n_back = int(P.counted_write(
+        widened, lambda d: d.write.mode("overwrite").parquet(f"{out_path}/signatures")
+    )["n"])
+    _write_bands(spark.read.parquet(f"{out_path}/signatures"), label, out_path)
+    return P.write_meta(out_path, {
+        **meta,
+        "nd_bits": bits,
+        "nd_tables": tables,
+        "n_vectors": n_back,
+        # the corpus the index HOLDS is unchanged by a widen; the policy
+        # width is restamped from it so a widen to >= this value clears
+        # the audit's stale_width flag
+        "recommended_bits": S.nd_recommended_bits(n_back),
+    })

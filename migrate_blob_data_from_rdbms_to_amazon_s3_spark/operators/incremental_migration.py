@@ -83,7 +83,7 @@ from pyspark.sql import types as T
 
 from ..functions.scalars import DEFAULT_S3_PREFIX, s3_object_key
 from .blob_pipeline import _per_object, put_blob
-from .mutation import _writer_lock
+from .mutation import _writer_lock, commit_json
 
 LEDGER_PREFIX = "run-"
 
@@ -139,16 +139,11 @@ def _run_schema(entries: list[dict], ids) -> T.StructType | None:
 
 
 def _commit_run(state_path: str, entry: dict) -> None:
-    """Append one ledger entry: temp write + atomic rename, serialized by
-    the kernel flock lease so two migrators can't both claim a run id."""
-    os.makedirs(state_path, exist_ok=True)
+    """Append one ledger entry: temp write + atomic rename
+    (``mutation.commit_json``), serialized by the kernel flock lease so
+    two migrators can't both claim a run id."""
     name = f"{LEDGER_PREFIX}{entry['run_id']:08d}.json"
-    tmp = os.path.join(state_path, f".{name}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(entry, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.rename(tmp, os.path.join(state_path, name))
+    commit_json(os.path.join(state_path, name), entry)
 
 
 def keep_latest(pointers: DataFrame, pk: str = "order_id",

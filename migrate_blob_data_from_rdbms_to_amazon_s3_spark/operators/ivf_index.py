@@ -14,9 +14,11 @@ inverted lists as standing Parquet:
   ids, so the scan is PARTITION-PRUNED to nprobe/k of the files — the
   1000-executor layout where a probe touches only its cells' splits
   (asserted via PartitionFilters in tests/test_ivf_index.py).
-- ``{path}/meta`` — 1-row JSON: layout version, k, corpus count,
-  embedding dim, generation counter — the compatibility contract a
-  probe or append checks first.
+- ``{path}/meta.json`` — layout version, k, corpus count, embedding
+  dim, generation counter: the compatibility contract a probe or append
+  checks first. Committed last by atomic rename and read without a
+  Spark job (operators/persisted_index, the lifecycle all three
+  persisted indexes share); ``path`` is driver-local.
 
 ``append_ivf_index`` is the incremental-ingest story: new vectors are
 assigned to the FROZEN trained centroids by the same Arrow argmin kernel
@@ -37,15 +39,14 @@ one scan of the new batch + a partitioned append.
 
 from __future__ import annotations
 
-from py4j.protocol import Py4JError
-from pyspark.errors import PySparkException
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
 
 from ..functions.local_frame import arrow_local_df
 from ..plans import similarity as S
+from . import persisted_index as P
 
 INDEX_VERSION = 1
 
@@ -62,25 +63,8 @@ _CELLS_SCHEMA = T.StructType(
 )
 
 
-_META_SCHEMA = "version long, n_vectors long, k long, emb_dim long, gens long"
-
-
-def _write_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    # one Arrow batch, not a 32-slice pickled RDD (functions/local_frame)
-    arrow_local_df(spark, [meta], _META_SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).json(f"{path}/meta")
-
-
 def read_meta(spark: SparkSession, path: str) -> dict:
-    # explicit schema: an inferred json read is a second full pass over
-    # the file (schema inference job + the collect)
-    row = spark.read.schema(_META_SCHEMA).json(f"{path}/meta").collect()[0].asDict()
-    assert int(row["version"]) == INDEX_VERSION, (
-        f"ivf index layout v{row['version']} != engine v{INDEX_VERSION}"
-    )
-    assert int(row["emb_dim"]) == S.EMB_DIM
-    return row
+    return P.read_meta(path, INDEX_VERSION, emb_dim=S.EMB_DIM)
 
 
 def load_centroids(spark: SparkSession, path: str) -> list[tuple[int, list[float]]]:
@@ -103,31 +87,20 @@ def load_cells(spark: SparkSession, path: str) -> DataFrame:
 
 
 def _write_cells(assigned: DataFrame, path: str, gen: int, mode: str) -> int:
-    """Write the inverted lists; returns the row count written (an
-    Observation on the write — no read-back re-scan, which at 100 TB is
-    a full extra pass over the index)."""
-    obs = Observation()
-    (
-        assigned.select(
-            F.col("vec_id").cast("long"),
-            "embedding",
-            F.lit(gen).cast("int").alias("gen"),
-            F.col("cluster").cast("int"),
-        )
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .repartition(F.col("cluster"))
-        .write.mode(mode)
-        .partitionBy("cluster")
-        .parquet(f"{path}/cells")
+    """Write the inverted lists; returns the row count written (counted
+    on the write — no read-back re-scan, which at 100 TB is a full extra
+    pass over the index)."""
+    cells = assigned.select(
+        F.col("vec_id").cast("long"),
+        "embedding",
+        F.lit(gen).cast("int").alias("gen"),
+        F.col("cluster").cast("int"),
     )
-    try:
-        return int(obs.get["n"])
-    except (PySparkException, Py4JError):
-        # a zero-task write (empty corpus — AQE coalesces the empty
-        # shuffle to no partitions) produces no metrics row and obs.get
-        # raises; recompute the count directly, which on that degenerate
-        # path is trivially cheap
-        return assigned.count()
+    return int(P.counted_write(
+        cells,
+        lambda d: d.repartition(F.col("cluster")).write.mode(mode)
+        .partitionBy("cluster").parquet(f"{path}/cells"),
+    )["n"])
 
 
 def build_ivf_index(emb: DataFrame, path: str, k: int | None = None) -> dict:
@@ -145,15 +118,13 @@ def build_ivf_index(emb: DataFrame, path: str, k: int | None = None) -> dict:
         spark, [(c, cv) for c, cv in cent_rows], "cluster int, cv array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     n = _write_cells(assigned, path, gen=0, mode="overwrite")
-    meta = {
+    return P.write_meta(path, {
         "version": INDEX_VERSION,
         "n_vectors": n,
         "k": len(cent_rows),
         "emb_dim": S.EMB_DIM,
         "gens": 1,
-    }
-    _write_meta(spark, path, meta)
-    return meta
+    })
 
 
 def append_ivf_index(spark: SparkSession, new_emb: DataFrame, path: str) -> dict:
@@ -168,15 +139,9 @@ def append_ivf_index(spark: SparkSession, new_emb: DataFrame, path: str) -> dict
     # the assignment kernel is 1:1, so the written-row observation IS
     # |new_emb| — no separate count job
     n_new = _write_cells(assigned, path, gen=gen, mode="append")
-    meta = {
-        "version": INDEX_VERSION,
-        "n_vectors": int(meta["n_vectors"]) + n_new,
-        "k": int(meta["k"]),
-        "emb_dim": S.EMB_DIM,
-        "gens": gen + 1,
-    }
-    _write_meta(spark, path, meta)
-    return meta
+    return P.write_meta(path, {
+        **meta, "n_vectors": meta["n_vectors"] + n_new, "gens": gen + 1,
+    })
 
 
 def probe_clusters(
@@ -312,40 +277,18 @@ def ivf_knn_batch_persisted(
 
 
 def freshness_audit(spark: SparkSession, emb: DataFrame, path: str) -> dict:
-    """Is the standing index stale against the live corpus? Two anti-join
-    counts decide the next operation:
+    """Is the standing index stale against the live corpus? Two id
+    coverage counts decide the next operation:
 
     - ``n_missing`` (live vectors absent from the index) > 0 → run
       ``append_ivf_index`` over exactly those rows;
     - ``n_orphaned`` (indexed vectors gone from the corpus) > 0 → the
       corpus shrank/was rewritten: rebuild (the cells are append-only).
 
-    One scan of each side; at 100 TB both anti-joins are id-column-only
-    (the cell scan prunes to vec_id)."""
+    One job, id-column-only on both sides (the cell scan prunes to
+    vec_id): persisted_index.coverage."""
     meta = read_meta(spark, path)
-    # ONE job for all three counts (r12): full-outer join the two
-    # unique-id sets and aggregate membership markers — the previous
-    # shape paid two anti-join jobs plus a count job, i.e. three scans
-    # of each side. vec_id is unique on both sides by contract.
-    indexed = load_cells(spark, path).select("vec_id", F.lit(1).alias("__i"))
-    live = emb.select("vec_id", F.lit(1).alias("__l"))
-    r = (
-        live.join(indexed, "vec_id", "full_outer")
-        .agg(
-            F.count("__l").alias("n_live"),
-            F.count(F.when(F.col("__i").isNull(), 1)).alias("n_missing"),
-            F.count(F.when(F.col("__l").isNull(), 1)).alias("n_orphaned"),
-        )
-        .collect()[0]
-    )
-    n_missing, n_orphaned = int(r["n_missing"]), int(r["n_orphaned"])
-    return {
-        "n_indexed": int(meta["n_vectors"]),
-        "n_live": int(r["n_live"]),
-        "n_missing": n_missing,
-        "n_orphaned": n_orphaned,
-        "stale": bool(n_missing or n_orphaned),
-    }
+    return P.coverage(meta["n_vectors"], emb, load_cells(spark, path))
 
 
 def cell_fill_audit(spark: SparkSession, path: str) -> DataFrame:

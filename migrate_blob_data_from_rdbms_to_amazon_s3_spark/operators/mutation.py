@@ -295,6 +295,26 @@ class CasWriterLease:
         return False
 
 
+def commit_json(file: str, obj) -> None:
+    """Write ``obj`` as JSON to the driver-local ``file`` atomically: a
+    temp file beside it, flushed and fsynced, then renamed over it. A
+    crash or error before the rename leaves the previous ``file`` (or
+    none) in place, and a reader never sees a half-written one. The run
+    ledger's entries (operators/incremental_migration) and the persisted
+    indexes' meta files (operators/persisted_index) commit this way."""
+    import json
+    import os
+
+    folder, name = os.path.split(file)
+    os.makedirs(folder, exist_ok=True)
+    tmp = os.path.join(folder, f".{name}.tmp")
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    os.rename(tmp, file)
+
+
 def rewrite(
     df: DataFrame, path: str, lock_timeout_s: float = 60.0, lease=None
 ) -> None:

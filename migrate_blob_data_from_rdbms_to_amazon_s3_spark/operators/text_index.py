@@ -22,9 +22,11 @@ rebuild by construction):
   time instead of a window over the standing table, and a future cap
   change needs no rebuild. Laid out by (band_idx, band_val) so a probe
   join's build side is collocated.
-- ``{path}/meta`` — 1-row Parquet: layout version, doc count, banding
-  config, and the default cap — the compatibility contract a probe
-  checks before trusting the index.
+- ``{path}/meta.json`` — layout version, doc count, banding config,
+  and the default cap: the compatibility contract a probe checks before
+  trusting the index. Committed last by atomic rename and read without
+  a Spark job (operators/persisted_index, the lifecycle all three
+  persisted indexes share); ``path`` is driver-local.
 
 Scale shape: the build is one corpus scan (the md5/shingle kernel paid
 ONCE) + one band repartition; a registry-internal pair probe reads the
@@ -37,13 +39,11 @@ from __future__ import annotations
 
 import shutil
 
-from py4j.protocol import Py4JError
-from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.local_frame import arrow_local_df
 from ..plans import dedup as D
+from . import persisted_index as P
 
 TEXT_INDEX_VERSION = 1
 N_SIGS = len(D.MINHASH_A)
@@ -84,55 +84,45 @@ def _band_rows(sigs: DataFrame) -> DataFrame:
     )
 
 
+def _write_bands(bands: DataFrame, dest: str) -> None:
+    """Band rows with their per-bucket fill count ``bdf`` (one window),
+    laid out by (band_idx, band_val) at ``dest``."""
+    w = Window.partitionBy("band_idx", "band_val")
+    bands.withColumn("bdf", F.count("*").over(w)).repartition(
+        "band_idx", "band_val"
+    ).write.mode("overwrite").parquet(dest)
+
+
+def _commit_meta(path: str, n_docs: int) -> None:
+    P.write_meta(path, {
+        "version": TEXT_INDEX_VERSION,
+        "n_docs": n_docs,
+        "n_bands": D.N_BANDS,
+        "rows_per_band": D.ROWS_PER_BAND,
+        "default_cap": D.MAX_BAND_BUCKET,
+    })
+
+
 def build_text_index(docs: DataFrame, path: str) -> None:
     """Build the standing index at ``path`` (overwrite). One corpus scan
     computes and persists the signatures; the band table derives from
     the STORED signatures (the md5 kernel never runs twice)."""
-    spark = docs.sparkSession
-    # doc count rides the WRITE as an Observation (r13, the r12
-    # ann/ivf-index discipline applied to the text twin): the previous
-    # sigs.count() re-scanned the just-written signatures — at 100 TB a
-    # full extra pass of the standing table per build.
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    _sigs_from_docs(docs).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/signatures")
-    sigs = spark.read.parquet(f"{path}/signatures")
-    w = Window.partitionBy("band_idx", "band_val")
-    bands = _band_rows(sigs).withColumn("bdf", F.count("*").over(w))
-    bands.repartition("band_idx", "band_val").write.mode("overwrite").parquet(
-        f"{path}/bands"
+    # doc count rides the WRITE (r13): the previous sigs.count()
+    # re-scanned the just-written signatures — at 100 TB a full extra
+    # pass of the standing table per build
+    n_docs = P.counted_write(
+        _sigs_from_docs(docs),
+        lambda d: d.write.mode("overwrite").parquet(f"{path}/signatures"),
+    )["n"]
+    _write_bands(
+        _band_rows(docs.sparkSession.read.parquet(f"{path}/signatures")),
+        f"{path}/bands",
     )
-    try:
-        n_docs = int(obs.get["n"])
-    except (PySparkException, Py4JError):
-        # a Spark build that posts no metrics row for a zero-task write
-        # (empty corpus) fails the JVM lookup — the read-back count is
-        # trivially cheap on that degenerate path. Anything else (a key
-        # typo included) is a bug and surfaces.
-        n_docs = sigs.count()
-    arrow_local_df(
-        spark,
-        [
-            (
-                TEXT_INDEX_VERSION,
-                n_docs,
-                D.N_BANDS,
-                D.ROWS_PER_BAND,
-                D.MAX_BAND_BUCKET,
-            )
-        ],
-        "version INT, n_docs BIGINT, n_bands INT, rows_per_band INT, default_cap INT",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _commit_meta(path, int(n_docs))
 
 
 def read_meta(spark: SparkSession, path: str) -> dict:
-    row = spark.read.parquet(f"{path}/meta").collect()[0]
-    if row.version != TEXT_INDEX_VERSION:
-        raise ValueError(f"text index layout v{row.version} != v{TEXT_INDEX_VERSION}")
-    return row.asDict()
+    return P.read_meta(path, TEXT_INDEX_VERSION)
 
 
 def load_signatures(spark: SparkSession, path: str) -> DataFrame:
@@ -271,13 +261,8 @@ def append_text_index(spark: SparkSession, new_docs: DataFrame, path: str) -> di
     # recount fills over old + new band rows (one window over the union;
     # the union reads stored band rows, never re-signs old docs)
     old = spark.read.parquet(f"{path}/bands").drop("bdf")
-    merged = old.unionByName(_band_rows(new_sigs))
-    w = Window.partitionBy("band_idx", "band_val")
-    rebuilt = merged.withColumn("bdf", F.count("*").over(w))
     staging = f"{path}/bands_staging"
-    rebuilt.repartition("band_idx", "band_val").write.mode("overwrite").parquet(
-        staging
-    )
+    _write_bands(old.unionByName(_band_rows(new_sigs)), staging)
     spark.read.parquet(staging).write.mode("overwrite").parquet(f"{path}/bands")
     shutil.rmtree(staging, ignore_errors=True)
     # meta commits LAST (the incremental_migration commit-last discipline):
@@ -285,17 +270,5 @@ def append_text_index(spark: SparkSession, new_docs: DataFrame, path: str) -> di
     # count, which freshness_audit detects — append is NOT crash-atomic on
     # plain Parquet (a table format's MERGE would subsume this).
     n_docs = meta["n_docs"] + n_added
-    arrow_local_df(
-        spark,
-        [
-            (
-                TEXT_INDEX_VERSION,
-                n_docs,
-                D.N_BANDS,
-                D.ROWS_PER_BAND,
-                D.MAX_BAND_BUCKET,
-            )
-        ],
-        "version INT, n_docs BIGINT, n_bands INT, rows_per_band INT, default_cap INT",
-    ).write.mode("overwrite").parquet(f"{path}/meta")
+    _commit_meta(path, n_docs)
     return {"n_added": n_added, "n_docs": n_docs}

@@ -19,7 +19,12 @@ configuration encodes the scale decisions:
   The package's daemon re-reads an archive only when it changed, and
   the same task runs in about 55 ms. Executors must therefore be able
   to import this package, which every kernel of it (``mapInPandas``/UDF
-  bodies defined in its modules) already requires.
+  bodies defined in its modules) already requires. In local mode the
+  session puts the package's parent directory on
+  ``spark.executorEnv.PYTHONPATH``, which PySpark merges into the
+  workers' path, so a driver that reached the package through its own
+  ``sys.path`` from any working directory gets working Python workers.
+  On a cluster the submitter ships the package (``--py-files``).
 """
 
 from __future__ import annotations
@@ -77,7 +82,10 @@ def get_spark(app_name: str = "rdbms-blob-s3-spark", cpus: str | int | None = No
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{cpus}]")
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.executorEnv.PYTHONPATH", root
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

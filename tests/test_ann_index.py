@@ -10,6 +10,8 @@ config — the frozen plane layout's whole point."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,7 @@ from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.ann_index import 
     knn_join_persisted,
     load_capped_bands,
     load_signatures,
+    neardup_incremental,
     neardup_persisted,
     read_meta,
     register_bands_bucketed,
@@ -68,10 +71,6 @@ def test_neardup_incremental_is_batch_x_registry(spark, sf_dir, tmp_path):
     pair has vec_new from the batch and vec_reg from the registry, the
     scores clear the threshold, and an empty batch / empty registry
     degrade typed."""
-    from migrate_blob_data_from_rdbms_to_amazon_s3_spark.operators.ann_index import (
-        neardup_incremental,
-    )
-
     emb = _emb(spark, sf_dir)
     n = emb.count()
     cut = 4 * n // 5
@@ -240,13 +239,32 @@ def test_version_gate(spark, sf_dir, tmp_path):
     emb = _emb(spark, sf_dir)
     path = str(tmp_path / "idx")
     build_ann_index(emb, path)
-    row = spark.read.json(f"{path}/meta").collect()[0].asDict()
+    with open(f"{path}/meta.json") as fh:
+        row = json.load(fh)
     row["version"] = 99
-    spark.createDataFrame([row]).coalesce(1).write.mode("overwrite").json(
-        f"{path}/meta"
-    )
-    with pytest.raises(AssertionError):
+    with open(f"{path}/meta.json", "w") as fh:
+        json.dump(row, fh)
+    with pytest.raises(ValueError, match="must be rebuilt"):
         read_meta(spark, path)
+
+
+def test_caller_input_checks_raise_value_error(spark, sf_dir, tmp_path):
+    """Out-of-range forced widths, a label probe of a label-less index
+    and a narrowing widen are caller errors: ValueError, which
+    ``python -O`` keeps (an assert would be stripped)."""
+    with pytest.raises(ValueError, match="bits"):
+        _forced_cfg(spark, S.ND_MAX_BITS + 1, S.ND_BANDS)
+    with pytest.raises(ValueError, match="tables"):
+        _forced_cfg(spark, S.ND_MIN_BITS, S.ND_BANDS + 1)
+    emb = _emb(spark, sf_dir)
+    path = str(tmp_path / "idx")
+    build_ann_index(emb, path, bits=8, tables=8)
+    with pytest.raises(ValueError, match="label"):
+        neardup_persisted(spark, emb, path)
+    with pytest.raises(ValueError, match="label"):
+        neardup_incremental(spark, emb, emb, path)
+    with pytest.raises(ValueError, match="widen only"):
+        widen_ann_index(spark, emb, path, str(tmp_path / "w"), bits=6, tables=8)
 
 
 def test_bucketed_registration(spark, sf_dir, tmp_path):

@@ -6,6 +6,8 @@ convergence of BOTH planes (pointer ledger and index membership)."""
 
 from __future__ import annotations
 
+import datetime
+import json
 import os
 
 import pytest
@@ -148,3 +150,52 @@ def test_uncommitted_run_rows_never_enter_index(spark, pipe, tmp_path):
     ).write.mode("overwrite").parquet(f"{p.target_path}/pointers/run=1")
     audit = p.ingest_pending()
     assert audit["n_docs_meta"] == n0  # ghost row never ingested
+
+
+def test_timestamp_cursor_raises_type_error_from_the_ledger_schema(spark, tmp_path):
+    """Index doc ids are the pointer cursor, so a timestamp cursor fails
+    loudly. The pointer schema comes from the ledger: once a pass has
+    committed, ``ingest_pending`` raises before launching any Spark job;
+    a ledger whose entries record no schema falls back to inferring it
+    from the pointer files and raises the same."""
+    url = f"jdbc:derby:{tmp_path}/tsdb;create=true"
+    spark.createDataFrame(
+        [(datetime.datetime(2024, 3, 1, 12, 0, i), f"id-{i}",
+          BASE[i % 3].format(i=i), b"x") for i in range(1, 4)],
+        "updated_at timestamp, order_id string, description string, "
+        "order_blob binary",
+    ).write.format("jdbc").options(
+        url=url, dbtable="orders_ts", driver=DERBY_DRIVER
+    ).mode("overwrite").save()
+    state = str(tmp_path / "state")
+    p = CorpusPipeline(
+        spark,
+        JdbcSource(url=url, table="orders_ts", driver=DERBY_DRIVER).load(spark),
+        store_url=f"file://{tmp_path}/objstore",
+        target_path=str(tmp_path / "target"),
+        state_path=state,
+        index_path=str(tmp_path / "index"),
+        results_path=str(tmp_path / "neardup"),
+        cursor_col="updated_at",
+    )
+    with pytest.raises(TypeError, match="integral cursor"):
+        p.run_increment()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ingest-ts", "ingest-ts")
+    try:
+        with pytest.raises(TypeError, match="integral cursor"):
+            p.ingest_pending()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("ingest-ts")) == []
+
+    for name in os.listdir(state):
+        with open(os.path.join(state, name)) as fh:
+            entry = json.load(fh)
+        del entry["schema"]
+        with open(os.path.join(state, name), "w") as fh:
+            json.dump(entry, fh)
+    with pytest.raises(TypeError, match="integral cursor"):
+        p.ingest_pending()

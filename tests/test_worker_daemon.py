@@ -9,7 +9,11 @@ calls to ``zipimport._read_directory``, the directory parse that every
 from __future__ import annotations
 
 import importlib
+import os
+import pathlib
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -147,3 +151,26 @@ def test_python_task_runs_with_the_patched_importer(spark):
     assert row.code_file.endswith("worker_daemon.py")
     assert row.n_zip_importers > 0
     assert row.n_reads == 0
+
+
+def test_driver_started_elsewhere_gets_python_workers(tmp_path):
+    """A driver started in another directory that reaches the package
+    through its own ``sys.path``, with no ``PYTHONPATH``, still runs
+    Python tasks: in local mode ``get_spark`` puts the package's parent
+    directory on the workers' path (``spark.executorEnv.PYTHONPATH``)."""
+    root = pathlib.Path(worker_daemon.__file__).resolve().parents[1]
+    driver = tmp_path / "driver.py"
+    driver.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {str(root)!r})
+        from migrate_blob_data_from_rdbms_to_amazon_s3_spark import get_spark
+        spark = get_spark(app_name="driver-elsewhere", cpus=1)
+        rows = spark.range(3).mapInPandas(lambda it: it, "id long").collect()
+        print("ROWS", sorted(r.id for r in rows))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run([sys.executable, str(driver)], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=300)
+    assert "ROWS [0, 1, 2]" in out.stdout, out.stderr[-3000:]
